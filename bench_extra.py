@@ -23,12 +23,11 @@ from pyspark.sql import SparkSession, functions as F  # noqa: E402
 
 from lsh_rs_spark.config import ORACLE_SRP, PIPELINE_CONFIG, SimHashConfig  # noqa: E402
 from lsh_rs_spark.operators import ann as ANN  # noqa: E402
-from lsh_rs_spark.operators import components as CC  # noqa: E402
 from lsh_rs_spark.operators import dedup as DD  # noqa: E402
 from lsh_rs_spark.operators import lsh as L  # noqa: E402
 from lsh_rs_spark.operators import simhash_ops as SH  # noqa: E402
 from lsh_rs_spark.operators import suffix as SX  # noqa: E402
-from lsh_rs_spark.operators import verify as V  # noqa: E402
+from lsh_rs_spark.plans.pipeline import MemoryStages, dedup_chain  # noqa: E402
 from lsh_rs_spark.sources.webpages import synth_webpages, with_doc_ids  # noqa: E402
 from lsh_rs_spark.tuning import suggest_shuffle_partitions  # noqa: E402
 
@@ -86,46 +85,23 @@ def profile(spark):
         res = {}
         for _ in range(3):
             run = {}
-            t0 = time.time()
-            sc.setJobDescription(f"{tag}: exact")
-            exact = DD.exact_dup_edges(corpus).localCheckpoint(eager=True)
-            run["exact"] = time.time() - t0
+            mem = MemoryStages()
 
-            t0 = time.time()
-            sc.setJobDescription(f"{tag}: signatures")
-            lsh_docs = corpus.join(exact.select("doc_id"), "doc_id", "left_anti")
-            sig = L.signatures(lsh_docs, cfg).persist()
-            sig.write.format("noop").mode("overwrite").save()
-            run["signatures"] = time.time() - t0
+            def timed_stage(name, build, parents, **kw):
+                sc.setJobDescription(f"{tag}: {name}")
+                t0 = time.time()
+                df = mem(name, build, parents, **kw)
+                if name == "signatures":
+                    noop(df)  # sign here, not inside candidate_pairs
+                run[name] = time.time() - t0
+                return df
 
+            keep = dedup_chain(corpus, cfg, timed_stage)
             t0 = time.time()
-            sc.setJobDescription(f"{tag}: pairs")
-            buckets = L.explode_bands(sig, cfg)
-            pairs = L.candidate_pairs(buckets, cfg).localCheckpoint(eager=True)
-            run["pairs"] = time.time() - t0
-
-            t0 = time.time()
-            sc.setJobDescription(f"{tag}: edges")
-            edges = V.jaccard_edges(pairs, sig, cfg).localCheckpoint(eager=True)
-            run["edges"] = time.time() - t0
-
-            t0 = time.time()
-            sc.setJobDescription(f"{tag}: cc")
-            all_edges = edges.select("src", "dst").unionByName(
-                exact.select(
-                    F.least("rep_id", "doc_id").alias("src"),
-                    F.greatest("rep_id", "doc_id").alias("dst"),
-                )
-            )
-            comps = CC.resolve_cc(cfg.cc_algorithm)(all_edges, cfg.cc_max_iters)
-            keep = CC.dedup_representatives(
-                CC.with_singletons(comps, corpus.where(F.col("text").isNotNull()))
-            )
-            run["cc_count"] = keep.where(~F.col("is_representative")).count() and (
-                time.time() - t0
-            )
-            run["cc_count"] = time.time() - t0
-            sig.unpersist()
+            sc.setJobDescription(f"{tag}: keep_count")
+            keep.where(~F.col("is_representative")).count()
+            run["keep_count"] = time.time() - t0
+            mem.release()
             spark.catalog.clearCache()
             if not corpus.is_cached and corpus is pages:
                 pages.persist().count()

@@ -28,12 +28,12 @@ from lsh_rs_spark.operators import l2_lsh as L2OP
 from lsh_rs_spark.operators import lsh as L
 from lsh_rs_spark.operators import simhash_ops as SH
 from lsh_rs_spark.operators import topk as TK
-from lsh_rs_spark.operators import verify as V
 from lsh_rs_spark.operators.components import (
     connected_components_auto,
     dedup_representatives,
     with_singletons,
 )
+from lsh_rs_spark.plans.pipeline import MemoryStages, dedup_chain
 
 
 def _attach_payload(
@@ -111,14 +111,18 @@ class MinHashLSH:
         return res
 
     def dedup(self, docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
-        """Full clustering: (doc_id, cluster_id, is_representative)."""
-        from lsh_rs_spark.operators.components import resolve_cc
-
-        self.fit(docs, id_col=id_col)
-        pairs = L.candidate_pairs(self._buckets, self.cfg)
-        edges = V.jaccard_edges(pairs, self._sig, self.cfg)
-        comps = resolve_cc(self.cfg.cc_algorithm)(edges, self.cfg.cc_max_iters)
-        return dedup_representatives(with_singletons(comps, self._sig))
+        """Full clustering: (doc_id, cluster_id, is_representative) — the
+        production chain (``plans.pipeline.dedup_chain``, exact prededup
+        included) checkpointed in memory.  Independent of ``fit``: the
+        fitted signatures/buckets are neither used nor replaced."""
+        stages = MemoryStages()
+        try:
+            return dedup_chain(
+                docs.select(F.col(id_col).alias("doc_id"), "text"), self.cfg, stages
+            )
+        finally:
+            # the keep list's lineage reads only checkpointed stages and docs
+            stages.release()
 
     def bucket_stats(self) -> DataFrame:
         if self._buckets is None:

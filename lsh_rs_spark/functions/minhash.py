@@ -1,4 +1,4 @@
-"""MinHash signer: batched NumPy kernel inside an Arrow pandas UDF.
+"""MinHash signer: batched NumPy kernel inside an Arrow-native UDF.
 
 Reference semantics: `MinHash::hash_vec_query` (`lsh-rs/src/hash.rs:243-303`)
 computes, per hash function j, the minimum of a random permutation over the
@@ -10,7 +10,8 @@ dim-bounded permutation array.
 Execution contract (input_hint): **no per-row Python** — the kernel is
 vectorized over the whole Arrow batch via a single flattened matrix multiply
 + ``np.minimum.reduceat`` segment reduction, chunked so the intermediate
-(h_chunk × num_perm int64) stays ~64 MB.
+(h_chunk × num_perm int64) stays ~64 MB.  One transport: Spark 4.1's
+``arrow_udf`` hands the kernel the shingle ListArray buffers zero-copy.
 
 The arithmetic is exact int64, identical to the SQL form
 ``MIN(((sid % P) * a_j + b_j) % P)`` — so the UDF path is byte-identical to
@@ -22,8 +23,6 @@ queries; the UDF is the production path (no K× row blowup).
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType
 
 from lsh_rs_spark.config import DedupConfig, MERSENNE31
@@ -152,91 +151,38 @@ def make_minhash_udf(cfg: DedupConfig):
     SQL-oracle parity) or 'oph' (production, O(shingles)).
 
     Transport (round-7): an **Arrow-native UDF** (Spark 4.1 ``arrow_udf``)
-    when available — the kernel reads the ListArray offsets/values buffers
-    zero-copy and returns a ListArray built from the (n, k) signature
-    matrix in one shot, skipping the pandas detour that materialized one
-    ndarray object per row on the way in and per signature on the way out.
-    Same kernels → bit-identical signatures (checksum-verified at 56k
-    pages, tools/variants_r07.py: warm median 1.37 s vs 1.67-1.9 s pandas,
-    and a far tighter spread — the pandas path's per-row object churn was
-    GC-noisy).  Falls back to the pandas_udf transport on Spark < 4.1."""
+    — the kernel reads the ListArray offsets/values buffers zero-copy and
+    returns a ListArray built from the (n, k) signature matrix in one
+    shot, with no per-row ndarray on the way in or out.  It replaced the
+    pandas UDF transport at bit-identical signatures (checksum-verified at
+    56k pages, OPTIMIZATION_r07.md: warm median 1.37 s vs 1.67-1.9 s, and
+    a far tighter spread — the pandas path's per-row object churn was
+    GC-noisy)."""
+    import pyarrow as pa
+    from pyspark.sql.functions import arrow_udf
+
+    from lsh_rs_spark.functions.arrow_batch import fixed_width_list, list_segments
+
     a, b = minhash_params(cfg.num_perm, cfg.seed)
     a0, b0 = int(a[0]), int(b[0])
     mode = cfg.minhash_mode
     k = cfg.num_perm
 
-    try:
-        from pyspark.sql.functions import arrow_udf
-    except ImportError:
-        arrow_udf = None
-
-    if arrow_udf is not None:
-        import pyarrow as pa
-
-        from lsh_rs_spark.functions.arrow_batch import (
-            fixed_width_list,
-            list_segments,
-        )
-
-        def _mh_arrow(sids):
-            if isinstance(sids, pa.ChunkedArray):
-                sids = sids.combine_chunks()
-            starts, flat = list_segments(sids)
-            if mode == "oph":
-                sig = oph_kernel(starts, flat, k, a0, b0)
-            else:
-                sig = minhash_kernel(starts, flat, a, b)
-            return fixed_width_list(sig)
-
-        # the module-level `from __future__ import annotations` stringifies
-        # signature hints, which arrow_udf's eval-type inference rejects —
-        # attach real type objects instead
-        _mh_arrow.__annotations__ = {"sids": pa.Array, "return": pa.Array}
-        return arrow_udf(_mh_arrow, ArrayType(LongType()))
-
-    @F.pandas_udf(ArrayType(LongType()))
-    def minhash_udf(sids: pd.Series) -> pd.Series:
-        lens = sids.map(len).to_numpy(dtype=np.int64)
-        offsets = np.zeros(lens.shape[0], dtype=np.int64)
-        np.cumsum(lens[:-1], out=offsets[1:])
-        flat = (
-            np.concatenate([np.asarray(x, dtype=np.int64) for x in sids])
-            if lens.sum()
-            else np.empty(0, dtype=np.int64)
-        )
+    def _mh_arrow(sids):
+        if isinstance(sids, pa.ChunkedArray):
+            sids = sids.combine_chunks()
+        starts, flat = list_segments(sids)
         if mode == "oph":
-            sig = oph_kernel(offsets, flat, k, a0, b0)
+            sig = oph_kernel(starts, flat, k, a0, b0)
         else:
-            sig = minhash_kernel(offsets, flat, a, b)
-        return pd.Series(list(sig))
+            sig = minhash_kernel(starts, flat, a, b)
+        return fixed_width_list(sig)
 
-    return minhash_udf
-
-
-def make_minhash_arrow_fn(cfg: DedupConfig):
-    """``mapInArrow`` body: (…, shingles) batches → same columns + minhash.
-
-    Reads the ListArray values+offsets buffers directly (zero-copy, no
-    per-row ndarray materialization — judge r3 item 4); same kernels as
-    ``make_minhash_udf``, so signatures are bit-identical."""
-    a, b = minhash_params(cfg.num_perm, cfg.seed)
-    a0, b0 = int(a[0]), int(b[0])
-    mode = cfg.minhash_mode
-    k = cfg.num_perm
-
-    def fn(batches):
-        from lsh_rs_spark.functions.arrow_batch import fixed_width_list, list_segments
-
-        for batch in batches:
-            col = batch.column(batch.schema.get_field_index("shingles"))
-            starts, flat = list_segments(col)
-            if mode == "oph":
-                sig = oph_kernel(starts, flat, k, a0, b0)
-            else:
-                sig = minhash_kernel(starts, flat, a, b)
-            yield batch.append_column("minhash", fixed_width_list(sig))
-
-    return fn
+    # the module-level `from __future__ import annotations` stringifies
+    # signature hints, which arrow_udf's eval-type inference rejects —
+    # attach real type objects instead
+    _mh_arrow.__annotations__ = {"sids": pa.Array, "return": pa.Array}
+    return arrow_udf(_mh_arrow, ArrayType(LongType()))
 
 
 def minhash_exact_np(id_sets: list[np.ndarray], a: np.ndarray, b: np.ndarray) -> np.ndarray:

@@ -13,8 +13,8 @@ DuckDB (the oracle path):
     sketch_bit_j  = 1 if SUM(votes) > 0 else 0     (ties -> 0, pinned)
     simhash       = SUM(sketch_bit_j << j)
 
-Production kernel: one Arrow batch at a time, NumPy bit-unpack + segment
-sum (`np.add.reduceat`) — no per-row Python.
+Production kernel: one Arrow batch at a time (``mapInArrow``), NumPy
+bit-unpack + segment sum (`np.add.reduceat`) — no per-row Python.
 
 Hamming distance between sketches: ``bit_count(a ^ b)`` — JVM built-in in
 Spark 3.5+/4.x and DuckDB.
@@ -23,9 +23,7 @@ Spark 3.5+/4.x and DuckDB.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, functions as F
-from pyspark.sql.types import LongType
 
 from lsh_rs_spark.config import SimHashConfig
 from lsh_rs_spark.functions.hashing import md5_64_py
@@ -98,32 +96,11 @@ def simhash_kernel(offsets: np.ndarray, flat_hashes: np.ndarray, n_bits: int) ->
     return out
 
 
-def make_simhash_udf(cfg: SimHashConfig):
-    """pandas_udf: ARRAY<BIGINT> token hashes → BIGINT simhash sketch."""
-
-    n_bits = cfg.n_bits
-
-    @F.pandas_udf(LongType())
-    def simhash_udf(token_hashes: pd.Series) -> pd.Series:
-        lens = token_hashes.map(len).to_numpy(dtype=np.int64)
-        offsets = np.zeros(lens.shape[0], dtype=np.int64)
-        np.cumsum(lens[:-1], out=offsets[1:])
-        flat = (
-            np.concatenate([np.asarray(x, dtype=np.int64) for x in token_hashes])
-            if lens.sum()
-            else np.empty(0, dtype=np.int64)
-        )
-        return pd.Series(simhash_kernel(offsets, flat, n_bits))
-
-    return simhash_udf
-
-
 def make_simhash_arrow_fn(cfg: SimHashConfig):
     """``mapInArrow`` body: (doc_id, tok_hashes) batches → (doc_id, simhash).
 
-    Zero-copy ListArray buffer access (judge r3 item 4); same kernel as
-    ``make_simhash_udf`` → bit-identical sketches.  Drops the token-hash
-    column on the way out (the sketch table never needs it)."""
+    Zero-copy ListArray buffer access (judge r3 item 4).  Drops the
+    token-hash column on the way out (the sketch table never needs it)."""
     n_bits = cfg.n_bits
 
     def fn(batches):

@@ -47,7 +47,7 @@ def exact_dup_edges(
     different subplans, so AQE cannot reuse one for the other) and paid two
     more AQE stage waves; the window reuses its own exchange for both the
     min and the count (round-7 A/B at 56k pages, warm medians:
-    0.61 s vs 1.57 s, identical edge set — tools/variants_r07.py).
+    0.61 s vs 1.57 s, identical edge set — OPTIMIZATION_r07.md).
     Skew note: a pathological boilerplate group lands on one reducer either
     way (the old join keyed on the same hash); the window's per-group state
     is a spillable sorted run, and exact-dup hot groups are first collapsed

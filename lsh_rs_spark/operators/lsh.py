@@ -32,24 +32,19 @@ from lsh_rs_spark.functions.shingles import shingle_ids_col
 
 
 def signatures(
-    docs: DataFrame, cfg: DedupConfig, id_col: str = "doc_id",
-    use_arrow: bool = False,
+    docs: DataFrame, cfg: DedupConfig, id_col: str = "doc_id"
 ) -> DataFrame:
     """docs(id, text) → (id, shingles ARRAY<BIGINT>, minhash ARRAY<BIGINT>).
 
     Production path: shingling/hashing JVM-side, MinHash in one Arrow kernel.
 
-    Transport choice, MEASURED at 56k pages (BASELINE.md round 4): the
-    pandas UDF ships the shingle arrays into Python ONE way (the arrays
-    themselves stay JVM-side; only minhash crosses back), while a
-    ``mapInArrow`` body — despite reading the ListArray buffers zero-copy —
-    must round-trip doc_id+shingles through the Python worker to emit them
-    again.  In the dedup chain the one-way pandas transport wins (9.7 s vs
-    11.9 s end-to-end), so it is the default; ``use_arrow=True`` keeps the
-    zero-copy path available (bit-identical signatures, shared kernels)
-    for callers that consume all three columns straight from the map.
-    Contrast simhash_sketches, where mapInArrow IS the default because its
-    output drops the token-hash column entirely."""
+    Transport: one Arrow-native UDF column (``make_minhash_udf``) — the
+    shingle arrays cross into Python ONE way and only the signature comes
+    back; doc_id and the shingles stay JVM-side.  A ``mapInArrow`` body
+    would round-trip doc_id+shingles through the Python worker to emit
+    them again (measured slower in the dedup chain, BASELINE.md round 4).
+    Contrast simhash_sketches, where mapInArrow IS the transport because
+    its output drops the token-hash column entirely."""
     from lsh_rs_spark.tuning import scan_parallelism_boost
 
     # a one-file parquet corpus scans as ONE task and the whole
@@ -68,13 +63,6 @@ def signatures(
         sh = docs.where(F.col("text").isNotNull()).select(
             F.col(id_col).alias("doc_id"),
             shingle_ids_col(cfg).alias("shingles"),
-        )
-    if use_arrow:
-        from lsh_rs_spark.functions.minhash import make_minhash_arrow_fn
-
-        return sh.mapInArrow(
-            make_minhash_arrow_fn(cfg),
-            "doc_id long, shingles array<bigint>, minhash array<bigint>",
         )
     return sh.withColumn("minhash", make_minhash_udf(cfg)("shingles"))
 

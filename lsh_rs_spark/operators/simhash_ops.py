@@ -2,8 +2,9 @@
 
 Two equivalent builders for the sketch table (doc_id, simhash):
 
-* ``simhash_sketches(..., use_udf=True)`` — production: one Arrow/NumPy
-  bit-vote kernel per batch (functions/simhash.simhash_kernel).
+* ``simhash_sketches(..., use_udf=True)`` — production: one ``mapInArrow``
+  pass running the NumPy bit-vote kernel per Arrow batch
+  (functions/simhash.simhash_kernel).
 * ``use_udf=False`` — declarative: explode (token × bit) and aggregate
   votes relationally.  Exact same integers; this is the form mirrored by
   the DuckDB oracle SQL.
@@ -18,7 +19,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from lsh_rs_spark.config import SimHashConfig
 from lsh_rs_spark.functions.hashing import shingle_id
-from lsh_rs_spark.functions.simhash import band_expr, hamming, make_simhash_udf
+from lsh_rs_spark.functions.simhash import band_expr, hamming
 
 
 def token_hashes(docs: DataFrame, cfg: SimHashConfig, id_col: str = "doc_id") -> DataFrame:
@@ -41,22 +42,18 @@ def token_hashes(docs: DataFrame, cfg: SimHashConfig, id_col: str = "doc_id") ->
 
 
 def simhash_sketches(
-    docs: DataFrame, cfg: SimHashConfig, id_col: str = "doc_id", use_udf: bool = True,
-    use_arrow: bool = True,
+    docs: DataFrame, cfg: SimHashConfig, id_col: str = "doc_id", use_udf: bool = True
 ) -> DataFrame:
     """(doc_id, simhash BIGINT).
 
-    ``use_udf=True`` runs the NumPy bit-vote kernel; with ``use_arrow``
-    (default) it is fed via ``mapInArrow`` reading the token-hash
-    ListArray buffers zero-copy — bit-identical sketches, no per-row
-    ndarray materialization."""
+    ``use_udf=True`` runs the NumPy bit-vote kernel through ``mapInArrow``,
+    reading the token-hash ListArray buffers zero-copy — no per-row
+    ndarray materialization, and the token hashes never cross back."""
     th = token_hashes(docs, cfg, id_col)
-    if use_udf and use_arrow:
+    if use_udf:
         from lsh_rs_spark.functions.simhash import make_simhash_arrow_fn
 
         return th.mapInArrow(make_simhash_arrow_fn(cfg), "doc_id long, simhash long")
-    if use_udf:
-        return th.select("doc_id", make_simhash_udf(cfg)("tok_hashes").alias("simhash"))
     # Declarative twin: explode token hashes × bit positions, sum ±1 votes.
     votes = (
         th.select("doc_id", F.explode("tok_hashes").alias("h"))

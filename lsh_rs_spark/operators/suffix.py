@@ -1020,15 +1020,13 @@ def substring_dup_spans(
     # anchors are the documented skew policy, never silent
     # (max_group_rows plays the max_bucket_size role).
     from lsh_rs_spark.operators.lsh import bucket_guard
-    from lsh_rs_spark.tuning import pinned_key_partitions
 
     max_group_rows = 4 * max_group_docs
-    # pin the anchor exchange width: the guard window AND the group
-    # aggregation below both reuse this one exchange, and the per-group
-    # SA kernel (the CPU-dominant stage) keeps full parallelism instead
-    # of AQE's byte-coalesced handful of partitions (see
+    # bucket_guard pins the anchor exchange width: the guard window AND
+    # the group aggregation below both reuse that one exchange, and the
+    # per-group SA kernel (the CPU-dominant stage) keeps full parallelism
+    # instead of AQE's byte-coalesced handful of partitions (see
     # substring_dup_pairs)
-    anchors = pinned_key_partitions(anchors, "anchor")
     anchors = bucket_guard(anchors, ["anchor"], max_group_rows)
     grouped = (
         anchors.groupBy("anchor")

@@ -51,6 +51,37 @@ def _materialized_rowcount(df: DataFrame, limit: int) -> int | None:
         return None
 
 
+def _prune_to_participants(pairs: DataFrame, sig: DataFrame) -> DataFrame:
+    """(doc_id, shingles) of the docs that appear in a candidate pair,
+    materialized — ONE stream over the big signature table, so the two
+    per-side resolution joins touch only the pruned set.
+
+    No distinct() on the participant ids by default: a LEFT SEMI join is
+    set-semantic over its right side already, so deduplicating it first
+    only added an exchange + aggregate AQE wave (round-7; result
+    identical).  When the pair table is already materialized (the
+    pipeline localCheckpoints it) and small, the distinct participant ids
+    are BROADCAST (round-7) — the semi join then streams the signature
+    table with NO exchange of it at all (the former plan shuffled the full
+    (doc_id, shingles) projection before AQE could see the tiny side: AQE
+    materializes both sides of a join before converting to broadcast).  A
+    web-scale pair table (> BROADCAST_PRUNE_PAIR_LIMIT) or an
+    unmaterialized pairs argument falls through to the shuffle plan
+    unchanged.  Same result either way — only the join strategy moves."""
+    cand_docs = (
+        pairs.select(F.col("src").alias("doc_id"))
+        .unionByName(pairs.select(F.col("dst").alias("doc_id")))
+    )
+    if _materialized_rowcount(pairs, BROADCAST_PRUNE_PAIR_LIMIT) is not None:
+        cand_docs = F.broadcast(cand_docs.distinct())
+    return (
+        sig.select("doc_id", "shingles")
+        .join(cand_docs, "doc_id", "left_semi")
+        .localCheckpoint(eager=True)  # pair-docs only: tiny; sever lineage so
+        # the two per-side joins don't re-stream the full corpus
+    )
+
+
 def shingle_table(sig: DataFrame) -> DataFrame:
     """(doc_id, shingles) → long (doc_id, sid), ids already distinct per doc."""
     return sig.select("doc_id", F.explode("shingles").alias("sid"))
@@ -74,31 +105,7 @@ def jaccard_edges(
     shingle ids are distinct per doc, so ``size(array_intersect)`` equals
     the exploded match count exactly.
     """
-    # no distinct() on the participant ids: a LEFT SEMI join is set-semantic
-    # over its right side already, so deduplicating it first only added an
-    # exchange + aggregate AQE wave (round-7; result identical)
-    cand_docs = (
-        pairs.select(F.col("src").alias("doc_id"))
-        .unionByName(pairs.select(F.col("dst").alias("doc_id")))
-    )
-    # round-7: when the pair table is already materialized (the pipeline
-    # localCheckpoints it) and small, BROADCAST the distinct participant
-    # ids — the semi join then streams the signature table with NO
-    # exchange of it at all (the former plan shuffled the full
-    # (doc_id, shingles) projection before AQE could see the tiny side:
-    # AQE materializes both sides of a join before converting to
-    # broadcast).  A web-scale pair table (> BROADCAST_PRUNE_PAIR_LIMIT)
-    # or an unmaterialized pairs argument falls through to the shuffle
-    # plan unchanged.  Same result either way — only the join strategy
-    # moves.
-    if _materialized_rowcount(pairs, BROADCAST_PRUNE_PAIR_LIMIT) is not None:
-        cand_docs = F.broadcast(cand_docs.distinct())
-    pruned = (
-        sig.select("doc_id", "shingles")
-        .join(cand_docs, "doc_id", "left_semi")
-        .localCheckpoint(eager=True)  # pair-docs only: tiny; sever lineage so
-        # the two per-side joins below don't re-stream the full corpus
-    )
+    pruned = _prune_to_participants(pairs, sig)
     res = (
         pairs
         .join(pruned.select(F.col("doc_id").alias("src"), F.col("shingles").alias("sh_src")), "src")
@@ -178,21 +185,7 @@ def containment_edges(
     al., VLDB 2016).  Exact re-rank stage analogue:
     `lsh-py/src/dist.rs:26-52`.
     """
-    cand_docs = (
-        pairs.select(F.col("src").alias("doc_id"))
-        .unionByName(pairs.select(F.col("dst").alias("doc_id")))
-        # no distinct(): left-semi join is set-semantic over its right side
-    )
-    if _materialized_rowcount(pairs, BROADCAST_PRUNE_PAIR_LIMIT) is not None:
-        # see jaccard_edges: broadcast the participant ids of a small,
-        # already-materialized pair table so the signature table streams
-        # without an exchange
-        cand_docs = F.broadcast(cand_docs.distinct())
-    pruned = (
-        sig.select("doc_id", "shingles")
-        .join(cand_docs, "doc_id", "left_semi")
-        .localCheckpoint(eager=True)
-    )
+    pruned = _prune_to_participants(pairs, sig)
     return (
         pairs
         .join(pruned.select(F.col("doc_id").alias("src"), F.col("shingles").alias("sh_src")), "src")

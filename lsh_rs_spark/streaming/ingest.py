@@ -348,20 +348,9 @@ def start_incremental_simhash_dedup(
     ``bit_count(xor)``.  The signature store persists (doc_id, simhash) —
     8 bytes/doc, so verification joins stay tiny.  ``cfg`` is a
     SimHashConfig."""
-    from lsh_rs_spark.functions.simhash import hamming, sketch_bands
+    from lsh_rs_spark.functions.simhash import sketch_bands
     from lsh_rs_spark.operators.simhash_ops import simhash_sketches
-
-    def verify(pairs: DataFrame, all_sig: DataFrame) -> DataFrame:
-        return (
-            pairs
-            .join(all_sig.select(F.col("doc_id").alias("src"),
-                                 F.col("simhash").alias("h_src")), "src")
-            .join(all_sig.select(F.col("doc_id").alias("dst"),
-                                 F.col("simhash").alias("h_dst")), "dst")
-            .withColumn("hamming", hamming("h_src", "h_dst").cast("int"))
-            .where(F.col("hamming") <= cfg.hamming_threshold)
-            .select("src", "dst", "hamming")
-        )
+    from lsh_rs_spark.operators.verify import hamming_edges
 
     process = _incremental_processor(
         workdir,
@@ -369,7 +358,7 @@ def start_incremental_simhash_dedup(
         band_fn=lambda s: sketch_bands(
             s, "simhash", "doc_id", cfg.bands, cfg.bits_per_band, "doc_id"
         ),
-        verify_fn=verify,
+        verify_fn=lambda pairs, all_sig: hamming_edges(pairs, all_sig, cfg),
         sig_cols=["doc_id", "simhash"],
         max_bucket_size=max_bucket_size,
         compact_every=compact_every,

@@ -364,31 +364,36 @@ def calibrate_shuffle_constants(spark, docs: DataFrame) -> dict:
     pass the results to ``suggest_shuffle_partitions(...,
     pairs_bytes_per_doc=..., edges_bytes_per_doc=...)``.
 
-    Runs signatures → candidate pairs → exact-verify edges with the
-    production config and attributes shuffle-WRITE bytes by differencing
-    the app-status-store total around each stage (valid because the stages
-    are materialized sequentially; concurrent foreign jobs on the same
-    session would pollute the diff — calibrate on a quiet session).
+    Runs the production chain (``plans.pipeline.dedup_chain``, exact
+    prededup included) with the production config, checkpointed in memory,
+    and attributes shuffle-WRITE bytes by differencing the app-status-store
+    per-stage totals around the candidate_pairs and edges stages (valid
+    because the stages are materialized sequentially; concurrent foreign
+    jobs on the same session would pollute the diff — calibrate on a quiet
+    session).
     """
     from lsh_rs_spark.config import PIPELINE_CONFIG
-    from lsh_rs_spark.operators import lsh as _L, verify as _V
+    from lsh_rs_spark.plans.pipeline import MemoryStages, dedup_chain
 
-    cfg = PIPELINE_CONFIG
+    mem = MemoryStages()
+    snaps: dict = {}
+
+    def measured(name, build, parents, **kw):
+        df = mem(name, build, parents, **kw)
+        if name == "signatures":
+            df.count()  # sign before the baseline: only pairing is diffed
+        snaps[name] = _shuffle_write_by_stage(spark)
+        return df
+
     docs = docs.persist()
     n = docs.count()
-    sig = _L.signatures(docs, cfg).persist()
-    sig.count()
     try:
-        base = _shuffle_write_by_stage(spark)
-        pairs = _L.candidate_pairs(
-            _L.explode_bands(sig, cfg), cfg
-        ).localCheckpoint(eager=True)
-        after_pairs = _shuffle_write_by_stage(spark)
-        _V.jaccard_edges(pairs, sig, cfg).count()
-        after_edges = _shuffle_write_by_stage(spark)
+        dedup_chain(docs, PIPELINE_CONFIG, measured)
     finally:
-        sig.unpersist()
+        mem.release()
         docs.unpersist()
+    base, after_pairs, after_edges = (
+        snaps["signatures"], snaps["candidate_pairs"], snaps["edges"])
     return {
         "n_docs": n,
         "pairs_bytes_per_doc": max(

@@ -771,6 +771,23 @@ def test_substring_spans_requires_radius_at_least_min_match(spark):
         substring_dup_spans(df, min_match=64, k_gram=16, snippet_radius=32)
 
 
+def test_substring_spans_anchor_group_on_one_exchange(spark):
+    """The span-extraction aggregation (anchor → collect_list of snippet
+    members) reuses the hot-anchor guard's pinned exchange: exactly one
+    hash exchange, keyed on ``anchor``, between it and the snippet cutter."""
+    from lsh_rs_spark.sources.webpages import synth_webpages, with_doc_ids
+
+    docs = with_doc_ids(synth_webpages(spark, 40, partitions=2))
+    spans = SX.substring_dup_spans(docs, min_match=64, k_gram=24, snippet_radius=128)
+    plan = spans._jdf.queryExecution().executedPlan().toString().splitlines()
+    top = next(i for i, line in enumerate(plan)
+               if "collect_list(struct(doc_id" in line and "snip_off" in line)
+    cutter = next(i for i in range(top, len(plan)) if "MapInPandas" in plan[i])
+    exchanges = [line for line in plan[top:cutter] if "Exchange" in line]
+    assert len(exchanges) == 1, exchanges
+    assert "hashpartitioning(anchor#" in exchanges[0]
+
+
 def test_train_centroids_exact_matches_numpy_integer_replica(spark):
     """judge r4 item 5: the distributed integer-exact Lloyd trainer is
     bit-identical to an independent NumPy fixed-point replica (floor

@@ -583,3 +583,46 @@ def test_pipeline_keep_policy_longest(spark, tmp_path):
     import pytest as _pytest
     with _pytest.raises(ValueError, match="keep_policy"):
         p2.run(docs, keep_policy="shortest")
+
+
+def _twin_corpus(spark):
+    """Synthetic pages with planted exact AND near twins."""
+    return with_doc_ids(
+        synth_webpages(spark, 300, dup_rate=0.1, exact_dup_rate=0.1, partitions=4)
+    )
+
+
+def test_frozen_bench_chain_matches_dedup_chain(spark):
+    """bench.py keeps a frozen copy of the dedup chain for its timed
+    regions; it must stay count-identical to ``dedup_chain``."""
+    import sys
+
+    from lsh_rs_spark.plans.pipeline import MemoryStages, dedup_chain
+
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    import bench
+
+    docs = _twin_corpus(spark).persist()
+    mem = MemoryStages()
+    keep = dedup_chain(docs, CFG, mem)
+    n_chain = keep.where(~F.col("is_representative")).count()
+    mem.release()
+    assert n_chain > 0
+    assert bench.dedup_pipeline_count(docs, CFG) == n_chain
+    docs.unpersist()
+
+
+def test_api_dedup_equals_pipeline_run(spark, tmp_path):
+    """``MinHashLSH.dedup`` is the production chain, exact prededup
+    included: same (doc_id, cluster_id, is_representative) set as
+    ``DedupPipeline.run``."""
+    from lsh_rs_spark.api import MinHashLSH
+
+    docs = _twin_corpus(spark)
+    rows = lambda df: {  # noqa: E731
+        tuple(r) for r in
+        df.select("doc_id", "cluster_id", "is_representative").collect()
+    }
+    want = rows(DedupPipeline(spark, CFG, str(tmp_path / "w")).run(docs, resume=False))
+    assert rows(MinHashLSH(CFG).dedup(docs)) == want
+    assert any(not rep for _, _, rep in want)

@@ -15,10 +15,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import SparkSession, functions as F  # noqa: E402
 
 from lsh_rs_spark.config import PIPELINE_CONFIG  # noqa: E402
-from lsh_rs_spark.operators import components as CC  # noqa: E402
-from lsh_rs_spark.operators import dedup as DD  # noqa: E402
-from lsh_rs_spark.operators import lsh as L  # noqa: E402
-from lsh_rs_spark.operators import verify as V  # noqa: E402
+from lsh_rs_spark.plans.pipeline import MemoryStages, dedup_chain  # noqa: E402
 from lsh_rs_spark.sources.webpages import synth_webpages, with_doc_ids  # noqa: E402
 from lsh_rs_spark.tuning import suggest_shuffle_partitions  # noqa: E402
 
@@ -28,32 +25,21 @@ LOG_DIR = "/tmp/spark-events-probe"
 
 
 def dedup_pipeline_count(docs, cfg, sc):
+    """Non-representative count of the production chain, each stage's jobs
+    tagged with the stage name."""
+    mem = MemoryStages()
+
+    def tagged(name, build, parents, **kw):
+        sc.setJobDescription(name)
+        return mem(name, build, parents, **kw)
+
     docs = docs.persist()
-    sc.setJobDescription("exact")
-    exact = DD.exact_dup_edges(docs).localCheckpoint(eager=True)
-    lsh_docs = docs.join(exact.select("doc_id"), "doc_id", "left_anti")
-    sig = L.signatures(lsh_docs, cfg).persist()
     try:
-        buckets = L.explode_bands(sig, cfg)
-        sc.setJobDescription("pairs")
-        pairs = L.candidate_pairs(buckets, cfg).localCheckpoint(eager=True)
-        sc.setJobDescription("edges")
-        edges = V.jaccard_edges(pairs, sig, cfg).localCheckpoint(eager=True)
-        all_edges = edges.select("src", "dst").unionByName(
-            exact.select(
-                F.least("rep_id", "doc_id").alias("src"),
-                F.greatest("rep_id", "doc_id").alias("dst"),
-            )
-        )
-        sc.setJobDescription("cc")
-        comps = CC.resolve_cc(cfg.cc_algorithm)(all_edges, cfg.cc_max_iters)
+        keep = dedup_chain(docs, cfg, tagged)
         sc.setJobDescription("keep_count")
-        keep = CC.dedup_representatives(
-            CC.with_singletons(comps, docs.where(F.col("text").isNotNull()))
-        )
         return keep.where(~F.col("is_representative")).count()
     finally:
-        sig.unpersist()
+        mem.release()
         docs.unpersist()
 
 

@@ -17,9 +17,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import SparkSession, functions as F  # noqa: E402
 
 from lsh_rs_spark.config import PIPELINE_CONFIG  # noqa: E402
-from lsh_rs_spark.operators import components as CC  # noqa: E402
 from lsh_rs_spark.operators import lsh as L  # noqa: E402
-from lsh_rs_spark.operators import verify as V  # noqa: E402
+from lsh_rs_spark.plans.pipeline import MemoryStages, dedup_chain  # noqa: E402
 from lsh_rs_spark.sources.webpages import synth_webpages, with_doc_ids  # noqa: E402
 
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -59,39 +58,19 @@ def main() -> None:
     docs = with_doc_ids(synth_webpages(spark, N_PAGES, partitions=PARTS)).persist()
     timed("materialize_pages", docs.count)
 
-    from lsh_rs_spark.operators.dedup import exact_dup_edges
-    exact = timed(
-        "exact_groups+lckpt",
-        lambda: exact_dup_edges(docs).localCheckpoint(eager=True),
-    )
+    mem = MemoryStages()
 
-    lsh_docs = docs.join(exact.select("doc_id"), "doc_id", "left_anti")
-    sig = L.signatures(lsh_docs, cfg).persist()
-    timed("signatures(persist)", sig.count)
+    def timed_stage(name, build, parents, **kw):
+        def run():
+            df = mem(name, build, parents, **kw)
+            if name == "signatures":
+                df.count()  # sign here, not inside candidate_pairs
+            return df
+        return timed(name, run)
 
-    buckets = L.explode_bands(sig, cfg)
-    pairs = timed(
-        "candidate_pairs+lckpt",
-        lambda: L.candidate_pairs(buckets, cfg).localCheckpoint(eager=True),
-    )
-    edges = timed(
-        "jaccard_edges+lckpt",
-        lambda: V.jaccard_edges(pairs, sig, cfg).localCheckpoint(eager=True),
-    )
-    all_edges = edges.select("src", "dst").unionByName(
-        exact.select(
-            F.least("rep_id", "doc_id").alias("src"),
-            F.greatest("rep_id", "doc_id").alias("dst"),
-        )
-    )
-    comps = timed(
-        "connected_components",
-        lambda: CC.connected_components(all_edges, cfg.cc_max_iters),
-    )
-    keep = CC.dedup_representatives(
-        CC.with_singletons(comps, docs.where(F.col("text").isNotNull()))
-    )
+    keep = dedup_chain(docs, cfg, timed_stage)
     timed("keep_list_count", lambda: keep.where(~F.col("is_representative")).count())
+    mem.release()
 
     print(json.dumps({"total": round(sum(t.values()), 3), "stages": t}))
     spark.stop()

@@ -6,7 +6,8 @@ materialized parquet input, in separate JVMs.  Reports docs/sec at both and
 
     efficiency = (docs_per_sec@32 / docs_per_sec@8) / (32 / 8)
 
-Writes tools/scaling_results.json and prints one JSON line.
+The timed job is the production dedup chain (``plans.pipeline.dedup_chain``,
+exact prededup included) checkpointed in memory.  Writes tools/scaling_results.json and prints one JSON line.
 
 Usage: python tools/scaling_bench.py [n_pages] [low_cores] [high_cores]
 """
@@ -27,7 +28,7 @@ import json, sys, time
 sys.path.insert(0, {repo!r})
 from pyspark.sql import SparkSession, functions as F
 from lsh_rs_spark.config import PIPELINE_CONFIG as cfg
-from lsh_rs_spark.operators import lsh as L, verify as V, components as CC
+from lsh_rs_spark.plans.pipeline import MemoryStages, dedup_chain
 
 cores = {cores}
 spark = (SparkSession.builder.master(f"local[{{cores}}]")
@@ -66,20 +67,17 @@ docs.agg(F.sum(F.length("text"))).collect()
 # and python-worker-pool cost outside the measured window (steady-state
 # throughput is what a long-running 100TB job sees)
 from lsh_rs_spark.sources.webpages import synth_webpages, with_doc_ids
-warm = with_doc_ids(synth_webpages(spark, 2000, partitions=cores))
-wsig = L.signatures(warm, cfg).persist()
-wedges = V.jaccard_edges(L.candidate_pairs(L.explode_bands(wsig, cfg), cfg), wsig, cfg)
-CC.connected_components(wedges, 5).count()
-wsig.unpersist()
+def removed_count(corpus):
+    mem = MemoryStages()
+    keep = dedup_chain(corpus, cfg, mem)
+    try:
+        return keep.where(~F.col("is_representative")).count()
+    finally:
+        mem.release()
+removed_count(with_doc_ids(synth_webpages(spark, 2000, partitions=cores)))
 
 t0 = time.time()
-sig = L.signatures(docs, cfg).persist()
-buckets = L.explode_bands(sig, cfg)
-pairs = L.candidate_pairs(buckets, cfg).localCheckpoint(eager=True)
-edges = V.jaccard_edges(pairs, sig, cfg).localCheckpoint(eager=True)
-comps = CC.resolve_cc(cfg.cc_algorithm)(edges, cfg.cc_max_iters)
-keep = CC.dedup_representatives(CC.with_singletons(comps, sig))
-removed = keep.where(~F.col("is_representative")).count()
+removed = removed_count(docs)
 wall = time.time() - t0
 print("RESULT " + json.dumps({{"cores": cores, "n_docs": n, "wall": wall,
     "docs_per_sec": n / wall, "removed": removed}}))

@@ -28,7 +28,7 @@ import json, sys, time
 sys.path.insert(0, {repo!r})
 from pyspark.sql import SparkSession, functions as F
 from lsh_rs_spark.config import PIPELINE_CONFIG as cfg
-from lsh_rs_spark.operators import lsh as L, verify as V, components as CC
+from lsh_rs_spark.plans.pipeline import MemoryStages, dedup_chain
 
 cores = {cores}
 spark = (SparkSession.builder.master(f"local[{{cores}}]")
@@ -55,18 +55,15 @@ marks = []
 def mark(name):
     marks.append((name, time.time()))
 
-mark("sig")
-sig = L.signatures(docs, cfg).persist(); sig.count()
-mark("pairs")
-buckets = L.explode_bands(sig, cfg)
-pairs = L.candidate_pairs(buckets, cfg).localCheckpoint(eager=True)
-mark("edges")
-edges = V.jaccard_edges(pairs, sig, cfg).localCheckpoint(eager=True)
-mark("cc")
-comps = CC.resolve_cc(cfg.cc_algorithm)(edges, cfg.cc_max_iters)
-comps = comps.localCheckpoint(eager=True)
-mark("keep")
-keep = CC.dedup_representatives(CC.with_singletons(comps, sig))
+mem = MemoryStages()
+def marked(name, build, parents, **kw):
+    mark(name)
+    df = mem(name, build, parents, **kw)
+    if name == "signatures":
+        df.count()  # sign in this window, not in candidate_pairs
+    return df
+keep = dedup_chain(docs, cfg, marked)
+mark("keep_count")
 removed = keep.where(~F.col("is_representative")).count()
 mark("end")
 print("MARKS " + json.dumps(marks))

@@ -1,6 +1,6 @@
-"""Per-stage scaling profile: the same job body as tools/scaling_bench.py
-with each stage materialized and timed separately, run at two core counts
-(taskset-confined, BLAS pinned, tmpfs spill — identical methodology).
+"""Per-stage scaling profile: the same job as tools/scaling_bench.py (the
+production dedup chain) with each stage timed separately, run at two core
+counts (taskset-confined, BLAS pinned, tmpfs spill — identical methodology).
 
 Usage: python tools/stage_profile.py [n_pages] [low_cores] [high_cores]
 Writes tools/stage_profile.json and prints one JSON line.
@@ -21,7 +21,7 @@ import json, sys, time
 sys.path.insert(0, {repo!r})
 from pyspark.sql import SparkSession, functions as F
 from lsh_rs_spark.config import PIPELINE_CONFIG as cfg
-from lsh_rs_spark.operators import lsh as L, verify as V, components as CC
+from lsh_rs_spark.plans.pipeline import MemoryStages, dedup_chain
 
 cores = {cores}
 spark = (SparkSession.builder.master(f"local[{{cores}}]")
@@ -41,32 +41,26 @@ n = docs.count()
 docs.agg(F.sum(F.length("text"))).collect()  # page-cache the bytes
 
 from lsh_rs_spark.sources.webpages import synth_webpages, with_doc_ids
-warm = with_doc_ids(synth_webpages(spark, 2000, partitions=cores))
-wsig = L.signatures(warm, cfg).persist()
-wedges = V.jaccard_edges(L.candidate_pairs(L.explode_bands(wsig, cfg), cfg), wsig, cfg)
-CC.resolve_cc(cfg.cc_algorithm)(wedges, 5).count()
-wsig.unpersist()
+def run_chain(corpus, stages):
+    mem = MemoryStages()
+    def timed(name, build, parents, **kw):
+        t0 = time.time()
+        df = mem(name, build, parents, **kw)
+        if name == "signatures":
+            df.count()  # sign here, not inside candidate_pairs
+        stages[name] = time.time() - t0
+        return df
+    keep = dedup_chain(corpus, cfg, timed)
+    t0 = time.time()
+    removed = keep.where(~F.col("is_representative")).count()
+    stages["keep_count"] = time.time() - t0
+    mem.release()
+    return removed
+run_chain(with_doc_ids(synth_webpages(spark, 2000, partitions=cores)), {{}})
 
 stages = {{}}
 t_all = time.time()
-t0 = time.time()
-sig = L.signatures(docs, cfg).persist(); sig.count()
-stages["sig"] = time.time() - t0
-t0 = time.time()
-buckets = L.explode_bands(sig, cfg)
-pairs = L.candidate_pairs(buckets, cfg).localCheckpoint(eager=True)
-stages["pairs"] = time.time() - t0
-t0 = time.time()
-edges = V.jaccard_edges(pairs, sig, cfg).localCheckpoint(eager=True)
-stages["edges"] = time.time() - t0
-t0 = time.time()
-comps = CC.resolve_cc(cfg.cc_algorithm)(edges, cfg.cc_max_iters)
-comps = comps.localCheckpoint(eager=True)
-stages["cc"] = time.time() - t0
-t0 = time.time()
-keep = CC.dedup_representatives(CC.with_singletons(comps, sig))
-removed = keep.where(~F.col("is_representative")).count()
-stages["keep"] = time.time() - t0
+removed = run_chain(docs, stages)
 wall = time.time() - t_all
 print("RESULT " + json.dumps({{"cores": cores, "n_docs": n, "wall": wall,
     "docs_per_sec": n / wall, "removed": removed,
