@@ -8,17 +8,16 @@ Scale path: SRP-bucketed candidate generation (≙ `LshSrp`,
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from lsh_rs_spark.config import SRPConfig
-from lsh_rs_spark.functions.simhash import band_expr, hamming
+from lsh_rs_spark.functions.simhash import hamming
 from lsh_rs_spark.functions.vectors import (
-    cosine_sim,
-    dot,
     l2_norm,
     make_srp_udf,
     srp_sketch_col,
 )
+from lsh_rs_spark.operators.topk import cosine_score, probe_join, top_k, vector_rerank
 
 
 def brute_force_topk(
@@ -33,9 +32,7 @@ def brute_force_topk(
     Query side is expected small → broadcast; the cross join then streams
     the corpus once per partition with no shuffle of the big side.
     """
-    # norms precomputed once per side: cos = dot/(qn*cn) is the identical
-    # double (same fold, same sqrt, same multiply order as cosine_sim) at
-    # 1/3 the interpreted fold work per pair
+    # norms precomputed once per side (cosine_score)
     q = F.broadcast(
         queries.select(
             F.col(id_col).alias("query_id"),
@@ -54,16 +51,9 @@ def brute_force_topk(
     scored = (
         q.crossJoin(c)
         .where(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cos", dot("qv", "cv") / (F.col("qn") * F.col("cn")))
+        .withColumn("cos", cosine_score())
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos", "rank")
-    )
+    return top_k(scored, k, "cos", True)
 
 
 def srp_sketches(
@@ -137,52 +127,19 @@ def ann_topk(
     the banding (oracle.q_ann_srp_topk); the brute-force exact form is
     gated separately as ``ann_cosine_topk_exact``.  ``use_udf=False`` takes
     the pure-Column sketch path (bit-identical to the SQL twin).  The
-    probe-side broadcast is adaptive (operators/topk.py policy)."""
+    probe and re-rank query sides are broadcast by estimated bytes
+    (``topk.probe_join`` / ``topk.vector_rerank``)."""
     from lsh_rs_spark.functions.simhash import sketch_bands
-    from lsh_rs_spark.operators.topk import resolve_probe_broadcast
 
     corpus_sk = srp_sketches(corpus, cfg, id_col, vec_col, use_udf=use_udf)
     query_sk = srp_sketches(queries, cfg, id_col, vec_col, use_udf=use_udf)
     qb = sketch_bands(query_sk, "srp", "vec_id", cfg.bands, cfg.bits_per_band, "query_id")
     cb = sketch_bands(corpus_sk, "srp", "vec_id", cfg.bands, cfg.bits_per_band, "neighbor_id")
-    small_queries = resolve_probe_broadcast(queries, cfg.bands, broadcast_probes)
-    if small_queries:
-        qb = F.broadcast(qb)
-    cand = (
-        qb.join(cb, ["band_idx", "band_key"])
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id")
-        .distinct()
+    cand = probe_join(
+        qb, cb, ["band_idx", "band_key"], cfg.bands, queries, broadcast_probes,
+        neighbor="neighbor_id",
     )
-    q_side = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qv"),
-        l2_norm(vec_col).alias("qn"),
-    )
-    if small_queries:
-        # same adaptive bound as the probe side: a plan-time broadcast
-        # hint spares AQE a materialize-then-decide round on the re-rank
-        # join (the ANN chain is stage-wave-latency-bound at small query
-        # counts); a corpus-scale query side falls through to AQE
-        q_side = F.broadcast(q_side)
-    scored = (
-        cand
-        .join(q_side, "query_id")
-        .join(
-            corpus.select(
-                F.col(id_col).alias("neighbor_id"),
-                F.col(vec_col).alias("cv"),
-                l2_norm(vec_col).alias("cn"),
-            ),
-            "neighbor_id",
-        )
-        .withColumn("cos", dot("qv", "cv") / (F.col("qn") * F.col("cn")))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos", "rank")
+    return vector_rerank(
+        cand, queries, corpus, k, cosine_score(), "cos", True, cfg.dim, broadcast_probes,
+        id_col, vec_col,
     )

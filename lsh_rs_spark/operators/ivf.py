@@ -23,7 +23,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql.types import ArrayType, IntegerType
 
-from lsh_rs_spark.functions.vectors import cosine_sim, dot, l2_norm
+from lsh_rs_spark.functions.vectors import cosine_sim
+from lsh_rs_spark.operators.topk import cosine_score, probe_join, vector_rerank
 
 
 def train_centroids(
@@ -223,8 +224,10 @@ def ivf_topk_trained(
     index = _assign_exact(fp, C, 1).withColumnRenamed("vec_id", "neighbor_id")
     qfp = _fixed_point(queries, id_col, vec_col)
     probes = _assign_exact(qfp, C, nprobe).withColumnRenamed("vec_id", "query_id")
-    probes = _maybe_broadcast_probes(probes, queries, nprobe, broadcast_probes)
-    return _probe_and_rank(probes, index, queries, corpus, k, id_col, vec_col)
+    return _probe_and_rank(
+        probes, index, queries, corpus, nprobe, k, None, broadcast_probes,
+        id_col, vec_col,
+    )
 
 
 def seed_codebook(
@@ -270,53 +273,20 @@ def assign_lists_join(
 
 def _probe_and_rank(
     probes: DataFrame, index: DataFrame, queries: DataFrame, corpus: DataFrame,
-    k: int, id_col: str, vec_col: str,
+    nprobe: int, k: int, dim: int | None, broadcast_probes: bool | None,
+    id_col: str, vec_col: str,
 ) -> DataFrame:
-    cand = (
-        probes.join(index, "list_id")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id")
-        .distinct()
+    """Probe the ``nprobe`` assigned lists → exact cosine re-rank → top-k
+    (``topk.probe_join`` / ``topk.vector_rerank``; ``dim`` None leaves the
+    re-rank query side to AQE unless ``broadcast_probes`` forces it)."""
+    cand = probe_join(
+        probes, index, "list_id", nprobe, queries, broadcast_probes,
+        neighbor="neighbor_id",
     )
-    scored = (
-        cand.join(
-            queries.select(
-                F.col(id_col).alias("query_id"),
-                F.col(vec_col).alias("qv"),
-                l2_norm(vec_col).alias("qn"),
-            ),
-            "query_id",
-        )
-        .join(
-            corpus.select(
-                F.col(id_col).alias("neighbor_id"),
-                F.col(vec_col).alias("cv"),
-                l2_norm(vec_col).alias("cn"),
-            ),
-            "neighbor_id",
-        )
-        .withColumn("cos", dot("qv", "cv") / (F.col("qn") * F.col("cn")))
+    return vector_rerank(
+        cand, queries, corpus, k, cosine_score(), "cos", True, dim,
+        broadcast_probes, id_col, vec_col,
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos", "rank")
-    )
-
-
-def _maybe_broadcast_probes(
-    probes: DataFrame, queries: DataFrame, nprobe: int,
-    broadcast_probes: bool | None,
-) -> DataFrame:
-    """Adaptive probe-side broadcast (shared topk.py policy): hint only
-    when the exploded probe rows stay bounded; a corpus-scale query side
-    falls back to an AQE-planned join."""
-    from lsh_rs_spark.operators.topk import resolve_probe_broadcast
-
-    if resolve_probe_broadcast(queries, nprobe, broadcast_probes):
-        return F.broadcast(probes)
-    return probes
 
 
 def ivf_topk(
@@ -334,11 +304,11 @@ def ivf_topk(
     (k-means codebook, production path)."""
     C = train_centroids(corpus, n_lists, seed=seed, vec_col=vec_col)
     index = assign_lists(corpus, C, 1, id_col, vec_col, id_alias="neighbor_id")
-    probes = _maybe_broadcast_probes(
-        assign_lists(queries, C, nprobe, id_col, vec_col, id_alias="query_id"),
-        queries, nprobe, broadcast_probes,
+    probes = assign_lists(queries, C, nprobe, id_col, vec_col, id_alias="query_id")
+    return _probe_and_rank(
+        probes, index, queries, corpus, nprobe, k, C.shape[1], broadcast_probes,
+        id_col, vec_col,
     )
-    return _probe_and_rank(probes, index, queries, corpus, k, id_col, vec_col)
 
 
 def ivf_topk_seeded(
@@ -356,8 +326,8 @@ def ivf_topk_seeded(
     DuckDB-reproducible; only the Lloyd training differs from ivf_topk)."""
     cb = seed_codebook(corpus, mod, id_col, vec_col)
     index = assign_lists_join(corpus, cb, 1, id_col, vec_col, id_alias="neighbor_id")
-    probes = _maybe_broadcast_probes(
-        assign_lists_join(queries, cb, nprobe, id_col, vec_col, id_alias="query_id"),
-        queries, nprobe, broadcast_probes,
+    probes = assign_lists_join(queries, cb, nprobe, id_col, vec_col, id_alias="query_id")
+    return _probe_and_rank(
+        probes, index, queries, corpus, nprobe, k, None, broadcast_probes,
+        id_col, vec_col,
     )
-    return _probe_and_rank(probes, index, queries, corpus, k, id_col, vec_col)

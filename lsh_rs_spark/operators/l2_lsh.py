@@ -8,11 +8,12 @@ keys (optionally query-directed multi-probe), exact-L2 re-rank, top-k.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from lsh_rs_spark.functions.l2 import l2_band_table
 from lsh_rs_spark.functions.vectors import l2_dist
 from lsh_rs_spark.operators.lsh import pairs_from_buckets
+from lsh_rs_spark.operators.topk import probe_join, vector_rerank
 
 
 def l2_buckets(
@@ -68,30 +69,20 @@ def l2_knn(
     reference QueryResult columns (`lsh-py/floky/__init__.py:9-11`).
     use_udf=False → Column-expression band keys (DuckDB-parity path;
     probes must be 0 — query-directed probing lives in the UDF).
-    The probe-side broadcast is adaptive (operators/topk.py policy).
+    The probe and re-rank query sides are broadcast by estimated bytes
+    (``topk.probe_join`` / ``topk.vector_rerank``).
     """
-    from lsh_rs_spark.operators.topk import resolve_probe_broadcast
-
-    # validate BEFORE resolve_probe_broadcast: an invalid call must raise
-    # without burning the broadcast-resolution count job (advisor r4)
+    # validate BEFORE any size decision: an invalid call must raise
+    # without burning a count job (advisor r4)
     if not use_udf and probes:
         raise ValueError("query-directed probing requires use_udf=True")
-
-    broadcast_probes = resolve_probe_broadcast(
-        queries, n_tables * (1 + probes), broadcast_probes
-    )
-
-    def _hint(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if broadcast_probes else df
 
     if not use_udf:
         corpus_b = _l2_bands_col_path(
             corpus, n_tables, k_hash, dim, r, seed, id_col, vec_col, "neighbor_id"
         )
-        query_b = _hint(
-            _l2_bands_col_path(
-                queries, n_tables, k_hash, dim, r, seed, id_col, vec_col, "query_id"
-            )
+        query_b = _l2_bands_col_path(
+            queries, n_tables, k_hash, dim, r, seed, id_col, vec_col, "query_id"
         )
     else:
         # production path: 8-byte BIGINT band keys — the bucket join's
@@ -102,34 +93,15 @@ def l2_knn(
             corpus, n_tables, k_hash, dim, r, seed, id_col, vec_col, probes=0,
             id_alias="neighbor_id",
         ))
-        query_b = _hint(compact_band_keys(
-            l2_band_table(
-                queries, n_tables, k_hash, dim, r, seed, id_col, vec_col,
-                probes=probes, id_alias="query_id",
-            )
+        query_b = compact_band_keys(l2_band_table(
+            queries, n_tables, k_hash, dim, r, seed, id_col, vec_col,
+            probes=probes, id_alias="query_id",
         ))
-    cand = (
-        query_b.join(corpus_b, "band_key")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.count("*").alias("n_collisions"))
+    cand = probe_join(
+        query_b, corpus_b, "band_key", n_tables * (1 + probes), queries,
+        broadcast_probes, neighbor="neighbor_id", n_collisions=True,
     )
-    scored = (
-        cand.join(
-            queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")),
-            "query_id",
-        )
-        .join(
-            corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")),
-            "neighbor_id",
-        )
-        .withColumn("dist", l2_dist("qv", "cv"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("dist").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= top_k)
-        .select("query_id", "neighbor_id", "n_collisions", "dist", "rank")
+    return vector_rerank(
+        cand, queries, corpus, top_k, l2_dist("qv", "cv"), "dist", False, dim,
+        broadcast_probes, id_col, vec_col, carry=("n_collisions",),
     )

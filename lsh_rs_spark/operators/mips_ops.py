@@ -26,6 +26,7 @@ from lsh_rs_spark.functions.mips import (
     mips_transform_put_col,
     mips_transform_query_col,
 )
+from lsh_rs_spark.operators.topk import probe_join, top_k, vector_rerank
 
 
 def make_mips_bands_udf(cfg: MIPSConfig, M: float, side: str, probes: int = 0):
@@ -156,11 +157,11 @@ def mips_topk(
 ) -> DataFrame:
     """Full MIPS predict: fit → asymmetric bucket probe → exact dot re-rank.
 
-    Returns (query_id, neighbor_id, dot, rank).  The probe-side broadcast
-    is adaptive (same policy as operators/topk.py): hinted when the
-    exploded probe keys stay bounded, else AQE plans the join — so the
-    corpus bucket table never shuffles in the common small-query case and
-    a corpus-scale query side cannot OOM executors.
+    Returns (query_id, neighbor_id, dot, rank).  The probe and re-rank
+    query sides are broadcast by estimated bytes (``topk.probe_join`` /
+    ``topk.vector_rerank``), else AQE plans the join — so the corpus
+    bucket table never shuffles in the common small-query case and a
+    corpus-scale query side cannot OOM executors.
 
     ``probes > 0`` (UDF path) enables query-directed multi-probe on the
     transformed query (M2 × P3 — same enumeration as
@@ -180,37 +181,13 @@ def mips_topk(
         from lsh_rs_spark.functions.l2 import compact_band_keys
 
         put, probe = compact_band_keys(put), compact_band_keys(probe)
-    from lsh_rs_spark.operators.topk import resolve_probe_broadcast
-
-    if resolve_probe_broadcast(
-        queries, cfg.n_tables * (1 + probes), broadcast_probes
-    ):
-        probe = F.broadcast(probe)
-    cand = (
-        probe
-        .join(put, "band_key")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id")
-        .distinct()
+    cand = probe_join(
+        probe, put, "band_key", cfg.n_tables * (1 + probes), queries,
+        broadcast_probes, neighbor="neighbor_id",
     )
-    scored = (
-        cand.join(
-            queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")),
-            "query_id",
-        )
-        .join(
-            corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")),
-            "neighbor_id",
-        )
-        .withColumn("dot", inner_product_col("qv", "cv", cfg.dim))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("dot").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "dot", "rank")
+    return vector_rerank(
+        cand, queries, corpus, k, inner_product_col("qv", "cv", cfg.dim), "dot",
+        True, cfg.dim, broadcast_probes, id_col, vec_col,
     )
 
 
@@ -386,17 +363,9 @@ def mips_multiprobe_candidates(
             queries, cfg, budget, id_col, vec_col, side="query",
             id_alias="query_id",
         )
-    from lsh_rs_spark.operators.topk import resolve_probe_broadcast
-
-    if resolve_probe_broadcast(
-        queries, cfg.n_tables * (1 + budget), broadcast_probes
-    ):
-        probe = F.broadcast(probe)
-    return (
-        probe.join(put, "band_key")
-        .where(F.col("query_id") != F.col("doc_id"))
-        .select("query_id", "doc_id")
-        .distinct()
+    return probe_join(
+        probe, put, "band_key", cfg.n_tables * (1 + budget), queries,
+        broadcast_probes,
     )
 
 
@@ -445,16 +414,7 @@ def mips_store_multiprobe_candidates(
         probe = mips_band_table(
             queries, cfg, M, "query", id_col, vec_col, "query_id", False
         )
-    from lsh_rs_spark.operators.topk import resolve_probe_broadcast
-
-    if resolve_probe_broadcast(queries, cfg.n_tables, broadcast_probes):
-        probe = F.broadcast(probe)
-    return (
-        probe.join(put, "band_key")
-        .where(F.col("query_id") != F.col("doc_id"))
-        .select("query_id", "doc_id")
-        .distinct()
-    )
+    return probe_join(probe, put, "band_key", cfg.n_tables, queries, broadcast_probes)
 
 
 def mips_brute_force_topk(
@@ -475,11 +435,4 @@ def mips_brute_force_topk(
         .where(F.col("query_id") != F.col("neighbor_id"))
         .withColumn("dot", inner_product_col("qv", "cv", dim))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("dot").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "dot", "rank")
-    )
+    return top_k(scored, k, "dot", True)

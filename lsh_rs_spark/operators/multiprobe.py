@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from lsh_rs_spark.config import SRPConfig, SimHashConfig
 from lsh_rs_spark.functions.simhash import band_expr
-from lsh_rs_spark.operators.topk import resolve_probe_broadcast
+from lsh_rs_spark.operators.topk import probe_join
 
 
 def flip_masks(n_bits: int, budget: int) -> list[int]:
@@ -121,14 +121,8 @@ def l2_multiprobe_candidates(
         corpus, n_tables, k, dim, r, seed, id_col, vec_col,
         probes=0, id_alias="doc_id",
     ))
-    if resolve_probe_broadcast(queries, n_tables * (1 + budget), broadcast_probes):
-        qk = F.broadcast(qk)
-    return (
-        qk
-        .join(ck, "band_key")
-        .where(F.col("query_id") != F.col("doc_id"))
-        .select("query_id", "doc_id")
-        .distinct()
+    return probe_join(
+        qk, ck, "band_key", n_tables * (1 + budget), queries, broadcast_probes
     )
 
 
@@ -172,15 +166,7 @@ def l2_store_multiprobe_candidates(
         corpus, n_tables, k, dim, r, seed, id_col, vec_col,
         probes=budget, id_alias="doc_id",
     ))
-    if resolve_probe_broadcast(queries, n_tables, broadcast_probes):
-        qk = F.broadcast(qk)
-    return (
-        qk
-        .join(ck, "band_key")
-        .where(F.col("query_id") != F.col("doc_id"))
-        .select("query_id", "doc_id")
-        .distinct()
-    )
+    return probe_join(qk, ck, "band_key", n_tables, queries, broadcast_probes)
 
 
 def minhash_second_min_table(
@@ -347,13 +333,9 @@ def minhash_multiprobe_candidates(
         buckets = explode_bands(signatures(corpus_docs, cfg, id_col=id_col), cfg)
     probes = minhash_multiprobe_keys(query_docs, cfg, budget, id_col)
     # exact fan-out: bands base keys + up to `budget` substitutions/query
-    if resolve_probe_broadcast(query_docs, cfg.bands + budget, broadcast_probes):
-        probes = F.broadcast(probes)
-    return (
-        probes.join(buckets, ["band_idx", "band_key"])
-        .where(F.col("query_id") != F.col("doc_id"))
-        .select("query_id", "doc_id")
-        .distinct()
+    return probe_join(
+        probes, buckets, ["band_idx", "band_key"], cfg.bands + budget,
+        query_docs, broadcast_probes,
     )
 
 
@@ -370,10 +352,10 @@ def multiprobe_candidates(
     Both sides are single scans: corpus bands via the struct-array explode
     (``sketch_bands``), probe keys via the in-row probe explosion above.
     ``broadcast_probes=None`` (default) broadcasts the probe side only
-    when the exploded probe-key count stays under
-    ``BROADCAST_PROBE_ROW_LIMIT`` — so the corpus band table never
-    shuffles in the common small-query case, while a corpus-scale query
-    side falls back to an AQE-planned join instead of OOMing executors.
+    when its estimated probe-key bytes fit the byte cap (``probe_join``)
+    — so the corpus band table never shuffles in the common small-query
+    case, while a corpus-scale query side falls back to an AQE-planned
+    join instead of OOMing executors.
     """
     from lsh_rs_spark.functions.simhash import sketch_bands
 
@@ -385,14 +367,7 @@ def multiprobe_candidates(
     probes = multiprobe_band_keys(
         query_sketches, cfg.bands, cfg.bits_per_band, budget
     )
-    if resolve_probe_broadcast(
-        query_sketches, cfg.bands * (1 + budget), broadcast_probes
-    ):
-        probes = F.broadcast(probes)
-    return (
-        probes
-        .join(corpus_bands, ["band_idx", "band_key"])
-        .where(F.col("query_id") != F.col("doc_id"))
-        .select("query_id", "doc_id")
-        .distinct()
+    return probe_join(
+        probes, corpus_bands, ["band_idx", "band_key"], cfg.bands * (1 + budget),
+        query_sketches, broadcast_probes,
     )

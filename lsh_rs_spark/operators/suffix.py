@@ -103,14 +103,6 @@ def _suffix_array_bytes(data: bytes) -> np.ndarray:
     return sa.astype(np.int64)
 
 
-def _lcp_len(data: bytes, i: int, j: int, cap: int) -> int:
-    m = 0
-    n = len(data)
-    while i + m < n and j + m < n and m < cap and data[i + m] == data[j + m]:
-        m += 1
-    return m
-
-
 def _adjacent_lcps(
     blob: bytes,
     sa: np.ndarray,
@@ -300,57 +292,6 @@ def _find_pairs_in_group(pdf: pd.DataFrame, min_match: int) -> pd.DataFrame:
         .astype({"src": "int64", "dst": "int64", "match_len": "int64"})
     )
     return out
-
-
-def winnowing_anchors(
-    docs: DataFrame,
-    min_match: int,
-    k_gram: int,
-    snippet_radius: int,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """(doc_id, anchor BIGINT, snippet STRING) — winnowing-selected grams.
-
-    All Column expressions: gram hashing via xxhash64, windowed leftmost-min
-    selection, bounded substring extraction.
-    """
-    w = min_match - k_gram + 1
-    d = docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")).where(
-        F.col("text").isNotNull() & (F.length("text") >= min_match)
-    )
-    grams = F.transform(
-        F.sequence(F.lit(1), F.length("text") - (k_gram - 1)),
-        lambda i: F.xxhash64(F.substring(F.col("text"), i, k_gram)),
-    )
-    d = d.withColumn("g", grams)
-    n_windows = F.greatest(F.lit(1), F.size("g") - (w - 1))
-    sel_pos = F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), n_windows),
-            lambda i: F.array_position(
-                F.slice("g", i, w), F.array_min(F.slice("g", i, w))
-            ).cast("int")
-            + i.cast("int")
-            - 1,
-        )
-    )
-    return (
-        d.select(
-            "doc_id",
-            "text",
-            F.explode(sel_pos).alias("pos"),
-        )
-        .select(
-            "doc_id",
-            F.expr("xxhash64(substring(text, pos, {k}))".format(k=k_gram)).alias("anchor"),
-            F.substring(
-                "text",
-                F.greatest(F.lit(1), F.col("pos") - snippet_radius),
-                F.lit(2 * snippet_radius),
-            ).alias("snippet"),
-        )
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -663,8 +604,6 @@ def substring_dup_pairs(
     id_col: str = "doc_id",
     text_col: str = "text",
     max_group_docs: int = 200,
-    use_kernel: bool = True,
-    anchor_mode: str = "auto",
 ) -> DataFrame:
     """(src, dst, match_len): pairs sharing a verbatim run >= min_match.
 
@@ -673,35 +612,20 @@ def substring_dup_pairs(
     Hot anchors (> max_group_docs docs) are dropped — counted via
     ``hot_anchor_count`` if needed by the caller.
 
-    ``anchor_mode`` (kernel path only):
-      * ``"auto"``/``"two_phase"`` (default): two-phase anchors — phase 1
-        ships 24-byte (doc_id, anchor, pos) rows; snippet bytes are cut
-        ONLY for anchors colliding in >= 2 documents.  A single-doc anchor
-        can never form a pair, so the emitted pair set is identical while
-        the snippet shuffle shrinks by the non-colliding fraction (~10-50×
-        at sparse web dup rates — measured in bench.py as
-        substring_snippet_bytes_{single,two}_phase).
-      * ``"single"``: one pass, a snippet per anchor — fewer stages; only
-        wins when almost every anchor collides (near-dup-dense corpora).
+    Anchors are two-phase (``winnowing_anchors_two_phase``): phase 1 ships
+    24-byte (doc_id, anchor, pos) rows; snippet bytes are cut ONLY for
+    anchors colliding in >= 2 documents.  A single-doc anchor can never
+    form a pair, so the emitted pair set equals the one-pass form's
+    (``winnowing_anchors_kernel``) while the snippet shuffle shrinks by the
+    non-colliding fraction (~10-50× at sparse web dup rates — measured in
+    bench.py as substring_snippet_bytes_{single,two}_phase).
     """
     if k_gram >= min_match:
         raise ValueError("k_gram must be < min_match")
-    if use_kernel:
-        if anchor_mode in ("auto", "two_phase"):
-            anchors = winnowing_anchors_two_phase(
-                docs, min_match, k_gram, snippet_radius, id_col, text_col,
-                max_group_docs=max_group_docs,
-            )
-        elif anchor_mode == "single":
-            anchors = winnowing_anchors_kernel(
-                docs, min_match, k_gram, snippet_radius, id_col, text_col
-            )
-        else:
-            raise ValueError(f"unknown anchor_mode {anchor_mode!r}")
-    else:
-        anchors = winnowing_anchors(
-            docs, min_match, k_gram, snippet_radius, id_col, text_col
-        )
+    anchors = winnowing_anchors_two_phase(
+        docs, min_match, k_gram, snippet_radius, id_col, text_col,
+        max_group_docs=max_group_docs,
+    )
     # One shuffle total: collect each anchor group into a single row, then
     # run the per-group suffix-array kernel with mapInPandas directly over
     # the grouped rows (many groups per Arrow batch — cheaper than

@@ -10,92 +10,118 @@ parameters → explode band keys → equi-join the bucket table (J1) → dedup
 candidates (A1 bucket-union ≙ groupBy) → exact re-rank (Jaccard here) →
 window top-k (W1, `lsh-py/src/dist.rs:26-52`).
 
-When the query set is small (the common case) the exploded query keys are
-broadcast so probing never shuffles the big bucket table.
+Every family's predict tail — probe join → candidate union → exact
+re-rank → per-query top-k — is written once here: ``probe_join``,
+``vector_rerank`` (dense families) and ``top_k``.
 """
 
 from __future__ import annotations
 
-import threading as _threading
-
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from lsh_rs_spark.config import DedupConfig
+from lsh_rs_spark.functions.vectors import dot, l2_norm
 from lsh_rs_spark.operators.lsh import explode_bands
 from lsh_rs_spark.operators.verify import shingle_table
+from lsh_rs_spark.tuning import PROBE_KEY_BYTES, broadcast_hint, vector_row_bytes
 
 
-#: Max *exploded* probe-key rows (n_queries × keys-per-query) that are
-#: still hinted for broadcast.  ~24 B/row → ≤ ~24 MB per executor copy.
-#: Above this the join is left to AQE (sort-merge or its own runtime
-#: broadcast decision): a corpus-fraction query side hint-broadcast at
-#: 100× scale OOMs executors (judge r3, What's-wrong #1).
-BROADCAST_PROBE_ROW_LIMIT = 1_000_000
+def probe_join(
+    probe_keys: DataFrame,
+    index_keys: DataFrame,
+    on: str | list[str],
+    fanout: int,
+    sized: DataFrame,
+    broadcast: bool | None = None,
+    neighbor: str = "doc_id",
+    n_collisions: bool = False,
+) -> DataFrame:
+    """Probe → candidate union, for every family: equi-join the per-query
+    probe keys against the index keys on ``on`` and drop self-hits.
+
+    Returns distinct (query_id, <neighbor>) candidates, or with
+    ``n_collisions`` the number of keys each pair agrees on (the
+    reference's ``n_collisions``, `lsh-py/floky/__init__.py:240-248`).
+    The probe side is broadcast when ``sized`` (the query frame; each of
+    its rows explodes into ``fanout`` probe keys) fits the byte cap
+    (``tuning.broadcast_hint``), so the index never shuffles in the common
+    small-query case; ``broadcast`` True/False overrides the estimate."""
+    probe_keys = broadcast_hint(probe_keys, sized, fanout * PROBE_KEY_BYTES, broadcast)
+    hits = probe_keys.join(index_keys, on).where(F.col("query_id") != F.col(neighbor))
+    if n_collisions:
+        return hits.groupBy("query_id", neighbor).agg(F.count("*").alias("n_collisions"))
+    return hits.select("query_id", neighbor).distinct()
 
 
-#: Memoized query-side counts for the adaptive-broadcast decision, keyed
-#: by the analyzed plan's semanticHash — predict-in-a-loop on the same
-#: query frame (or any frame with an identical plan) pays the count job
-#: ONCE, not once per call (judge r4 item 6 / advisor r4).  Entries
-#: expire after ``_COUNT_MEMO_TTL`` seconds: the semantic hash identifies
-#: the PLAN, not the data, so a long-lived service predicting against a
-#: growing table must not keep hinting broadcast from a count taken when
-#: the table was small (an explicit F.broadcast hint is honored
-#: regardless of actual size — a stale "small" verdict could OOM the
-#: join).  FIFO-bounded.
-_COUNT_MEMO: dict[int, tuple[int, float]] = {}
-_COUNT_MEMO_MAX = 256
-_COUNT_MEMO_TTL = 300.0  # seconds — cached/persisted plans (data pinned)
-#: Uncached plans re-read their source on every action, so the count can
-#: drift with the underlying table; their memo entries expire much sooner
-#: (advisor r5 — a stale "small" verdict forces an F.broadcast hint that
-#: is honored regardless of the table's CURRENT size).
-_COUNT_MEMO_TTL_UNCACHED = 60.0
-_COUNT_MEMO_LOCK = _threading.Lock()  # dict mutated from user threads
+def top_k(
+    scored: DataFrame,
+    k: int,
+    score: str,
+    descending: bool,
+    neighbor: str = "neighbor_id",
+    carry: tuple[str, ...] = (),
+) -> DataFrame:
+    """Per-query top-k window (W1, `lsh-py/src/dist.rs:26-52`): rank by
+    ``score``, ties broken by ``neighbor`` ascending (pinned,
+    deterministic).  Returns (query_id, <neighbor>, *carry, <score>,
+    rank)."""
+    order = F.col(score).desc() if descending else F.col(score).asc()
+    w = Window.partitionBy("query_id").orderBy(order, F.col(neighbor).asc())
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select("query_id", neighbor, *carry, score, "rank")
+    )
 
 
-def _memo_key(df: DataFrame) -> int | None:
-    try:
-        return df._jdf.queryExecution().analyzed().semanticHash()
-    except Exception:  # Spark Connect / plan not analyzable — skip memo
-        return None
+def cosine_score() -> Column:
+    """Exact cosine of the re-rank columns: dot/(qn*cn) is the identical
+    double to ``cosine_sim`` (same fold, same sqrt, same multiply order)
+    at 1/3 the interpreted fold work per pair."""
+    return dot("qv", "cv") / (F.col("qn") * F.col("cn"))
 
 
-def resolve_probe_broadcast(
+def vector_rerank(
+    candidates: DataFrame,
     queries: DataFrame,
-    keys_per_query: int,
-    broadcast: bool | None,
-    limit: int = BROADCAST_PROBE_ROW_LIMIT,
-) -> bool:
-    """Shared adaptive-broadcast decision for every probe-style equi-join.
+    corpus: DataFrame,
+    k: int,
+    score: Column,
+    name: str,
+    descending: bool,
+    dim: int | None,
+    broadcast: bool | None = None,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    carry: tuple[str, ...] = (),
+) -> DataFrame:
+    """Exact re-rank of dense-vector candidates (query_id, neighbor_id,
+    *carry) → per-query top-k of ``score`` named ``name``.
 
-    None → count the query side (hint broadcast only when the exploded
-    probe-key rows stay under ``limit``).  The count is memoized on the
-    plan's semantic hash with a 5-minute TTL, so repeated predicts over
-    the same query frame run the job once per TTL window; an explicit
-    bool skips it entirely.  Each operator passes its own exact
-    ``keys_per_query`` fan-out."""
-    if broadcast is not None:
-        return broadcast
-    import time as _time
-
-    key = _memo_key(queries)
-    now = _time.monotonic()
-    try:
-        ttl = _COUNT_MEMO_TTL if queries.is_cached else _COUNT_MEMO_TTL_UNCACHED
-    except Exception:  # Connect: no is_cached — use the conservative TTL
-        ttl = _COUNT_MEMO_TTL_UNCACHED
-    with _COUNT_MEMO_LOCK:
-        hit = _COUNT_MEMO.get(key) if key is not None else None
-        if hit is not None and now - hit[1] <= ttl:
-            return hit[0] * keys_per_query <= limit
-    n = queries.count()  # job runs outside the lock
-    if key is not None:
-        with _COUNT_MEMO_LOCK:
-            if len(_COUNT_MEMO) >= _COUNT_MEMO_MAX:
-                _COUNT_MEMO.pop(next(iter(_COUNT_MEMO)))
-            _COUNT_MEMO[key] = (n, now)
-    return n * keys_per_query <= limit
+    ``score`` is written over the query and corpus vectors ``qv``/``cv``
+    and their L2 norms ``qn``/``cn``.  The query side (``dim`` doubles
+    plus an id per row) is broadcast when it fits the byte cap; with
+    ``dim`` unknown (None) only ``broadcast=True`` hints it."""
+    q_side = queries.select(
+        F.col(id_col).alias("query_id"),
+        F.col(vec_col).alias("qv"),
+        l2_norm(vec_col).alias("qn"),
+    )
+    if dim is not None or broadcast is not None:
+        q_side = broadcast_hint(q_side, queries, vector_row_bytes(dim or 0), broadcast)
+    scored = (
+        candidates.join(q_side, "query_id")
+        .join(
+            corpus.select(
+                F.col(id_col).alias("neighbor_id"),
+                F.col(vec_col).alias("cv"),
+                l2_norm(vec_col).alias("cn"),
+            ),
+            "neighbor_id",
+        )
+        .withColumn(name, score)
+    )
+    return top_k(scored, k, name, descending, carry=carry)
 
 
 def probe_buckets(
@@ -103,37 +129,23 @@ def probe_buckets(
     buckets: DataFrame,
     cfg: DedupConfig,
     broadcast_queries: bool | None = None,
-    broadcast_probe_row_limit: int = BROADCAST_PROBE_ROW_LIMIT,
     count_df: DataFrame | None = None,
 ) -> DataFrame:
     """(query_id, minhash) × bucket table → candidate (query_id, doc_id)
-    with n_collisions (number of bands agreeing — the reference's
-    ``n_collisions``, `lsh-py/floky/__init__.py:240-248`).
+    with n_collisions (number of bands agreeing).
 
     ``broadcast_queries``: True/False force the probe-side broadcast hint
-    on/off; None (default) decides adaptively via
-    ``resolve_probe_broadcast`` — broadcast only when the exploded
-    probe-key count (one ``count()`` of the query signatures at
-    plan-construction time, cheap vs the probe join; pass a bool to skip
-    it) stays under ``broadcast_probe_row_limit``, otherwise let AQE pick
-    the physical join.  Batch-mode callers with a corpus-scale query side
-    should rely on the adaptive default (or pass False explicitly).
-    ``count_df``: cheaper same-cardinality frame to count for the decision
-    (the raw query docs) so the pandas-UDF signing stage is not executed
-    once for the count and again for the probe join (advisor r4)."""
+    on/off; None (default) decides by the estimated probe-key bytes
+    (``probe_join``).  ``count_df``: cheaper same-cardinality frame to
+    size for the decision (the raw query docs), so a count never executes
+    the signing stage just to decide."""
     qb = explode_bands(
         query_sig.select(F.col("query_id").alias("doc_id"), "minhash"), cfg
     ).select("band_idx", "band_key", F.col("doc_id").alias("query_id"))
-    if resolve_probe_broadcast(
-        count_df if count_df is not None else query_sig,
-        cfg.bands, broadcast_queries, broadcast_probe_row_limit,
-    ):
-        qb = F.broadcast(qb)
-    hits = qb.join(buckets, ["band_idx", "band_key"])
-    return (
-        hits.where(F.col("query_id") != F.col("doc_id"))
-        .groupBy("query_id", "doc_id")
-        .agg(F.count("*").alias("n_collisions"))
+    return probe_join(
+        qb, buckets, ["band_idx", "band_key"], cfg.bands,
+        count_df if count_df is not None else query_sig, broadcast_queries,
+        n_collisions=True,
     )
 
 
@@ -148,14 +160,7 @@ def candidate_bound(candidates: DataFrame, bound: int) -> DataFrame:
     doc_id ascending for a pinned deterministic order — so one hot query
     colliding with a mega-bucket pays O(bound), not O(bucket).
     """
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("n_collisions").desc(), F.col("doc_id").asc()
-    )
-    return (
-        candidates.withColumn("_cr", F.row_number().over(w))
-        .where(F.col("_cr") <= bound)
-        .drop("_cr")
-    )
+    return top_k(candidates, bound, "n_collisions", True, "doc_id").drop("rank")
 
 
 def rerank_topk(
@@ -196,14 +201,7 @@ def rerank_topk(
             F.col("n_common") / (F.col("n_q") + F.col("n_d") - F.col("n_common")),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("jaccard").desc(), F.col("doc_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "doc_id", "n_collisions", "jaccard", "rank")
-    )
+    return top_k(scored, k, "jaccard", True, "doc_id", carry=("n_collisions",))
 
 
 def knn(

@@ -18,37 +18,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from lsh_rs_spark.config import DedupConfig, SimHashConfig
 from lsh_rs_spark.functions.simhash import hamming
-
-#: Max candidate-pair rows for which the pair-participant id set is
-#: broadcast into the semi-join prune instead of shuffling the signature
-#: table.  2M pairs → ≤ 4M distinct ids ≈ 64 MB broadcast (8 B ids plus
-#: hash-relation overhead) — comfortably inside executor memory, while a
-#: web-scale pair table falls through to the shuffle plan.
-BROADCAST_PRUNE_PAIR_LIMIT = 2_000_000
-
-
-def _materialized_rowcount(df: DataFrame, limit: int) -> int | None:
-    """Row count of ``df`` when counting is KNOWN cheap, else None.
-
-    Cheap means every leaf of the optimized plan is already materialized
-    (a localCheckpoint/RDD scan) or a file source (count served from
-    metadata/statistics) and the plan is a bare scan of one such leaf —
-    the dedup pipeline checkpoints its candidate pairs, so the verify
-    stage can afford one tiny count job to pick its join strategy.  A
-    pairs argument with live lineage (the oracle-gate path) returns None:
-    counting it would execute the whole pairing DAG twice."""
-    try:
-        plan = df._jdf.queryExecution().optimizedPlan()
-        leaves = plan.collectLeaves()
-        if leaves.size() != 1:
-            return None
-        cls = leaves.apply(0).getClass().getSimpleName()
-        if cls not in ("LogicalRDD", "LogicalRelation"):
-            return None
-        n = df.limit(limit + 1).count()
-        return n if n <= limit else None
-    except Exception:
-        return None
+from lsh_rs_spark.tuning import ID_BYTES, broadcast_hint
 
 
 def _prune_to_participants(pairs: DataFrame, sig: DataFrame) -> DataFrame:
@@ -60,20 +30,20 @@ def _prune_to_participants(pairs: DataFrame, sig: DataFrame) -> DataFrame:
     set-semantic over its right side already, so deduplicating it first
     only added an exchange + aggregate AQE wave (round-7; result
     identical).  When the pair table is already materialized (the
-    pipeline localCheckpoints it) and small, the distinct participant ids
-    are BROADCAST (round-7) — the semi join then streams the signature
-    table with NO exchange of it at all (the former plan shuffled the full
+    pipeline stores or checkpoints it) and its two participant ids per
+    pair fit the byte cap (``tuning.broadcast_hint``), the distinct ids are
+    BROADCAST (round-7) — the semi join then streams the signature table
+    with NO exchange of it at all (the former plan shuffled the full
     (doc_id, shingles) projection before AQE could see the tiny side: AQE
     materializes both sides of a join before converting to broadcast).  A
-    web-scale pair table (> BROADCAST_PRUNE_PAIR_LIMIT) or an
-    unmaterialized pairs argument falls through to the shuffle plan
+    web-scale pair table, or a pairs argument with live lineage (never
+    executed just to size it), falls through to the shuffle plan
     unchanged.  Same result either way — only the join strategy moves."""
-    cand_docs = (
+    cand_docs = broadcast_hint(
         pairs.select(F.col("src").alias("doc_id"))
-        .unionByName(pairs.select(F.col("dst").alias("doc_id")))
+        .unionByName(pairs.select(F.col("dst").alias("doc_id"))),
+        pairs, 2 * ID_BYTES, distinct=True,
     )
-    if _materialized_rowcount(pairs, BROADCAST_PRUNE_PAIR_LIMIT) is not None:
-        cand_docs = F.broadcast(cand_docs.distinct())
     return (
         sig.select("doc_id", "shingles")
         .join(cand_docs, "doc_id", "left_semi")

@@ -14,6 +14,7 @@ stats that feed hot-bucket salting decisions.
 
 from __future__ import annotations
 
+import threading
 import time
 from dataclasses import dataclass, field
 
@@ -21,7 +22,6 @@ from pyspark.sql import DataFrame, functions as F
 
 from lsh_rs_spark.functions.l2 import l2_band_table
 from lsh_rs_spark.functions.simhash import sketch_bands
-from lsh_rs_spark.operators.ann import srp_sketches
 from lsh_rs_spark.stats import collision_prob_cosine, collision_prob_l2, estimate_l
 from lsh_rs_spark.config import SRPConfig
 
@@ -113,6 +113,8 @@ def optimize_srp_params(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> list[OptResult]:
+    from lsh_rs_spark.operators.ann import srp_sketches
+
     p1 = collision_prob_cosine(cosine_sim)
     out = []
     for k in ks:
@@ -210,6 +212,65 @@ def _conf_bytes(spark, key: str, default: int) -> int:
         return default
 
 
+def _plan_walk(df) -> tuple[set, list]:
+    """(inner-node class names, leaf nodes) of ``df``'s optimized plan —
+    plan metadata only, no job.  The one walk behind both the scan-task
+    estimate (``scan_parallelism_boost``) and the row estimate
+    (``estimate_rows``)."""
+    inner, leaves = set(), []
+    stack = [df._jdf.queryExecution().optimizedPlan()]
+    while stack:
+        node = stack.pop()
+        kids = node.children()
+        if kids.size():
+            inner.add(node.getClass().getSimpleName())
+            stack.extend(kids.apply(i) for i in range(kids.size()))
+        else:
+            leaves.append(node)
+    return inner, leaves
+
+
+def _scan_tasks(leaves, target: int, maxpb: int) -> int | None:
+    """Estimated scan tasks of a plan's leaves: Σ ceil(file_size /
+    maxPartitionBytes) over the distinct files of its file relations.  A
+    plan without files counts cached partitions, RDD partitions, Range
+    slices and local relations instead, and is None when a leaf is none of
+    these.  Stops early once the file estimate reaches ``target``."""
+    files: set = set()
+    file_tasks = other = 0
+    unknown = False
+    for leaf in leaves:
+        cls = leaf.getClass().getSimpleName()
+        if cls == "LogicalRelation" and (
+            leaf.relation().getClass().getSimpleName() == "HadoopFsRelation"
+        ):
+            listed = leaf.relation().location().allFiles()
+            for i in range(listed.size()):
+                f = listed.apply(i)
+                path = f.getPath().toString()
+                if path not in files:
+                    files.add(path)
+                    file_tasks += -(-f.getLen() // maxpb)
+                    if file_tasks >= target:
+                        return file_tasks
+        elif cls == "InMemoryRelation":
+            other += leaf.cacheBuilder().cachedColumnBuffers().getNumPartitions()
+        elif cls == "LogicalRelation":
+            other += -(-leaf.computeStats().sizeInBytes() // maxpb)
+        elif cls == "LogicalRDD":
+            other += leaf.rdd().getNumPartitions()
+        elif cls == "Range":
+            ns = leaf.numSlices()
+            other += ns.get() if ns.isDefined() else target
+        elif cls in ("LocalRelation", "OneRowRelation"):
+            other += 1
+        else:
+            unknown = True
+    if files:
+        return file_tasks
+    return None if unknown else other
+
+
 def scan_parallelism_boost(df, *key_cols: str):
     """Repartition a NARROW file-backed input up to ``defaultParallelism``
     before a CPU-heavy per-document kernel (guide §2.5 "input skew" /
@@ -218,77 +279,162 @@ def scan_parallelism_boost(df, *key_cols: str):
     while the rest of the cluster idles; round-7 event logs showed the
     whole documents-table chain executing on 1 core).
 
-    The decision is made from file METADATA only (no job, no plan
-    execution): estimated scan tasks = Σ ceil(file_size /
-    maxPartitionBytes).  It boosts only when that estimate is below the
+    The decision is made from plan METADATA only (no job, no plan
+    execution): the estimated scan tasks of the optimized plan's leaves
+    (``_scan_tasks``).  It boosts only when that estimate is below the
     core count — which bounds the repartition shuffle to <
     maxPartitionBytes × cores by construction, so a large corpus (many
     files / big files) is NEVER repartitioned and pays only the listing
-    lookup (early-exited after the first `cores` files).  Non-file inputs
-    (in-memory/synthetic corpora) are returned unchanged — their
-    partitioning is the caller's contract.  The repartition key is the
-    given id column (deterministic hash assignment — survives task
-    retries, SPARK-38388) when provided, round-robin otherwise.
+    lookup (early-exited after the first `cores` tasks).  A file-less plan
+    is sized from its cached relations' actual partition count, RDD
+    partitions and Range slices; any other leaf leaves ``df`` unchanged
+    (always correct).  The repartition key is the given id column
+    (deterministic hash assignment — survives task retries, SPARK-38388)
+    when provided, round-robin otherwise.
     """
-    from pyspark.sql import functions as _F
-
     spark = df.sparkSession
-    sc = spark.sparkContext
-    target = sc.defaultParallelism
+    target = spark.sparkContext.defaultParallelism
     maxpb = _conf_bytes(spark, "spark.sql.files.maxPartitionBytes", 128 << 20)
-    est = 0
     try:
-        files = df.inputFiles()
+        est = _scan_tasks(_plan_walk(df)[1], target, maxpb)
     except Exception:
         return df
-    if files:
-        try:
-            jvm = sc._jvm
-            hconf = sc._jsc.hadoopConfiguration()
-            for f in files:
-                p = jvm.org.apache.hadoop.fs.Path(f)
-                fs = p.getFileSystem(hconf)
-                est += -(-fs.getFileStatus(p).getLen() // maxpb)
-                if est >= target:
-                    return df
-        except Exception:
-            return df
-    else:
-        # ``inputFiles`` goes blind through joins/filters and cached plans
-        # (it reports [] for e.g. an anti-join over a persisted scan — the
-        # exact shape the dedup pipeline feeds ``signatures``).  Walk the
-        # optimized plan's LEAVES instead — still metadata-only, no jobs:
-        # cached relations expose their actual partition count, file
-        # relations their size, Range its slice count.  ANY leaf this
-        # cannot classify aborts the boost (returning df unchanged is
-        # always correct).
-        try:
-            leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
-            for idx in range(leaves.size()):
-                leaf = leaves.apply(idx)
-                cls = leaf.getClass().getSimpleName()
-                if cls == "InMemoryRelation":
-                    est += leaf.cacheBuilder().cachedColumnBuffers().getNumPartitions()
-                elif cls == "LogicalRelation":
-                    est += -(-leaf.computeStats().sizeInBytes().longValue() // maxpb)
-                elif cls == "LogicalRDD":
-                    est += leaf.rdd().getNumPartitions()
-                elif cls == "Range":
-                    ns = leaf.numSlices()
-                    est += ns.get() if ns.isDefined() else target
-                elif cls in ("LocalRelation", "OneRowRelation"):
-                    est += 1
-                else:
-                    return df
-                if est >= target:
-                    return df
-        except Exception:
-            return df
-    if est <= 0:
+    if est is None or est <= 0 or est >= target:
         return df
     if key_cols:
-        return df.repartition(target, *[_F.col(c) for c in key_cols])
+        return df.repartition(target, *[F.col(c) for c in key_cols])
     return df.repartition(target)
+
+
+#: Byte cap of every size-driven broadcast hint — probe keys, re-rank
+#: query vectors, verify's participant ids.  An F.broadcast hint is
+#: honored whatever the side's real size, so the estimate must stay far
+#: below executor memory: a corpus-fraction query side hint-broadcast at
+#: 100× scale OOMs executors.  Above the cap AQE picks the join at run
+#: time (sort-merge, or its own runtime broadcast).
+BROADCAST_BYTE_CAP = 32 << 20
+#: Estimated bytes per broadcast row, priced by side.
+PROBE_KEY_BYTES = 24  # (band_idx, band_key, query_id)
+ID_BYTES = 8  # one participant id; also the id of a vector row
+
+
+def vector_row_bytes(dim: int) -> int:
+    """A re-rank query row: ``dim`` doubles plus its id."""
+    return dim * 8 + ID_BYTES
+
+
+#: Inner plan nodes that keep their input's row count (Union sums it).
+_ROW_KEEPING = frozenset({
+    "Project", "Repartition", "RepartitionByExpression", "Union",
+    "ArrowEvalPython", "BatchEvalPython",
+})
+#: Inner nodes that change the row count without pairing rows: the
+#: estimate runs one bounded count through them.
+_ROW_CHANGING = frozenset({
+    "Filter", "Sample", "GlobalLimit", "LocalLimit", "Generate",
+    "MapInPandas", "MapInArrow",
+})
+
+#: Bounded counts behind ``estimate_rows``, keyed by the analyzed plan's
+#: semanticHash (and the bound), so predict-in-a-loop over one query frame
+#: counts once.  The hash identifies the PLAN, not the data, so entries
+#: expire: cached/persisted plans (data pinned) after ``_COUNT_MEMO_TTL``
+#: seconds, plans that re-read their source on every action much sooner —
+#: a stale "small" count would force a hint on a table that has since
+#: grown.  FIFO-bounded; mutated from user threads.
+_COUNT_MEMO: dict = {}
+_COUNT_MEMO_MAX = 256
+_COUNT_MEMO_TTL = 300.0
+_COUNT_MEMO_TTL_UNCACHED = 60.0
+_COUNT_MEMO_LOCK = threading.Lock()
+
+
+def _bounded_count(df: DataFrame) -> int:
+    """``df``'s rows, counted up to the most rows any side can fit."""
+    bound = BROADCAST_BYTE_CAP // ID_BYTES  # no side is narrower than an id
+    try:
+        key = (df._jdf.queryExecution().analyzed().semanticHash(), bound)
+        ttl = _COUNT_MEMO_TTL if df.is_cached else _COUNT_MEMO_TTL_UNCACHED
+    except Exception:  # plan not analyzable — count without the memo
+        key = None
+    now = time.monotonic()
+    with _COUNT_MEMO_LOCK:
+        hit = _COUNT_MEMO.get(key) if key is not None else None
+        if hit is not None and now - hit[1] <= ttl:
+            return hit[0]
+    n = df.limit(bound + 1).count()  # job runs outside the lock
+    if key is not None:
+        with _COUNT_MEMO_LOCK:
+            if len(_COUNT_MEMO) >= _COUNT_MEMO_MAX:
+                _COUNT_MEMO.pop(next(iter(_COUNT_MEMO)))
+            _COUNT_MEMO[key] = (n, now)
+    return n
+
+
+def _leaf_rows(leaf) -> int | None:
+    """Rows of a plan leaf from its statistics; None when they hold none
+    worth trusting (an RDD or checkpoint keeps its pre-materialization
+    estimate, an unmaterialized cache reports its plan's guess)."""
+    cls = leaf.getClass().getSimpleName()
+    if cls == "LocalRelation":
+        return leaf.data().size()
+    if cls == "OneRowRelation":
+        return 1
+    if cls == "LogicalRelation":
+        # file bytes over the schema's default row width: statistics carry
+        # no row count for a path-read table, and a compressed file
+        # understates its rows — the cap's margin absorbs that
+        return -(-leaf.stats().sizeInBytes() // (8 + leaf.schema().defaultSize()))
+    if cls == "Range" or (
+        cls == "InMemoryRelation" and leaf.cacheBuilder().isCachedColumnBuffersLoaded()
+    ):
+        rc = leaf.stats().rowCount()
+        return int(rc.get()) if rc.isDefined() else None
+    return None
+
+
+def estimate_rows(df: DataFrame) -> int | None:
+    """Rows of ``df`` for a size decision, or None — no estimate.
+
+    * file-backed and materialized cached leaves, Range and local rows
+      under row-keeping nodes: summed from plan statistics, no job;
+    * a filter, sample, explode or Python map over leaves, and any leaf
+      without trusted statistics (a checkpoint, an RDD, an unmaterialized
+      cache): one bounded count, memoized (``_bounded_count``);
+    * a join, aggregate, window or distinct anywhere in the plan: None —
+      a live pairing DAG is never executed just to make a decision.
+    """
+    try:
+        inner, leaves = _plan_walk(df)
+        if not inner <= _ROW_KEEPING | _ROW_CHANGING:
+            return None
+        rows = [_leaf_rows(leaf) for leaf in leaves]
+    except Exception:  # plan not readable (e.g. Spark Connect)
+        return None
+    if inner & _ROW_CHANGING or None in rows:
+        return _bounded_count(df)
+    return sum(rows)
+
+
+def broadcast_hint(
+    side: DataFrame,
+    sized: DataFrame,
+    row_bytes: int,
+    force: bool | None = None,
+    distinct: bool = False,
+) -> DataFrame:
+    """``side``, hinted for broadcast when ``sized`` — the frame each of
+    whose rows becomes ``row_bytes`` of ``side`` — is estimated under
+    ``BROADCAST_BYTE_CAP``; otherwise unchanged, and AQE plans the join.
+    ``force`` True/False overrides the estimate (no job); ``distinct``
+    deduplicates the broadcast copy.  Every size-driven broadcast hint in
+    the package is decided here."""
+    if force is None:
+        rows = estimate_rows(sized)
+        force = rows is not None and rows * row_bytes <= BROADCAST_BYTE_CAP
+    if not force:
+        return side
+    return F.broadcast(side.distinct() if distinct else side)
 
 
 def pinned_key_partitions(df, *key_cols: str):

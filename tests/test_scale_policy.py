@@ -4,9 +4,9 @@
    ids exactly like the 'table:h1-h2-…' strings they replace — the
    production L2/MIPS paths must emit identical candidates/results to the
    string-keyed oracle twins.
-2. The probe-side broadcast hint is adaptive: applied under the exploded
-   probe-row limit, dropped (AQE decides) above it — and the join result
-   is identical either way.
+2. Every size-driven broadcast hint is adaptive: applied when the side's
+   estimated bytes fit ``tuning.BROADCAST_BYTE_CAP``, dropped (AQE
+   decides) above it — and the join result is identical either way.
 """
 
 import numpy as np
@@ -78,7 +78,8 @@ def _optimized_plan(df) -> str:
     return df._jdf.queryExecution().optimizedPlan().toString().lower()
 
 
-def test_probe_buckets_broadcast_policy(spark):
+def test_probe_buckets_broadcast_policy(spark, monkeypatch):
+    from lsh_rs_spark import tuning
     from lsh_rs_spark.operators.lsh import explode_bands, signatures
     from lsh_rs_spark.operators.topk import probe_buckets
 
@@ -89,7 +90,9 @@ def test_probe_buckets_broadcast_policy(spark):
         F.col("doc_id").alias("query_id"), "minhash", "shingles"
     )
     hinted = probe_buckets(qsig, buckets, CFG)          # adaptive: small → hint
-    plain = probe_buckets(qsig, buckets, CFG, broadcast_probe_row_limit=0)
+    with monkeypatch.context() as m:
+        m.setattr(tuning, "BROADCAST_BYTE_CAP", 0)     # nothing fits → no hint
+        plain = probe_buckets(qsig, buckets, CFG)
     forced = probe_buckets(qsig, buckets, CFG, broadcast_queries=False)
     assert "broadcast" in _optimized_plan(hinted)
     assert "broadcast" not in _optimized_plan(plain)
@@ -190,16 +193,19 @@ def test_minhash_multiprobe_rejects_oph(spark):
 
 def test_broadcast_count_memoized_predict_loop(spark, monkeypatch):
     """judge r4 item 6: the adaptive-broadcast count job fires ONCE for a
-    repeated predict over the same query frame — the decision is memoized
-    on the analyzed plan's semantic hash, and the count targets the RAW
-    query docs (signing stage not executed for the decision)."""
+    repeated predict over the same query frame — a filter over a leaf is
+    counted once, memoized on the analyzed plan's semantic hash, and the
+    count targets the RAW query docs (signing stage not executed for the
+    decision).  A materialized cached query frame is sized from plan
+    statistics and pays no count at all."""
+    from lsh_rs_spark import tuning
     from lsh_rs_spark.api import MinHashLSH
-    from lsh_rs_spark.operators import topk as TK
 
-    TK._COUNT_MEMO.clear()
+    tuning._COUNT_MEMO.clear()
     docs = _docs(spark)
-    queries = docs.where("doc_id % 10 = 0").cache()
-    queries.count()  # materialize cache outside the instrumented window
+    queries = docs.where("doc_id % 10 = 0")
+    cached = docs.where("doc_id % 10 = 1").cache()
+    cached.count()  # materialize cache outside the instrumented window
 
     calls = {"n": 0}
     cls = type(queries)  # patch the CONCRETE class (pyspark.sql.classic)
@@ -214,6 +220,140 @@ def test_broadcast_count_memoized_predict_loop(spark, monkeypatch):
     for _ in range(3):
         m.predict(queries, top_k=3)  # plan construction only — no action
     assert calls["n"] == 1, f"count job ran {calls['n']}x for 3 predicts"
+    for _ in range(3):
+        m.predict(cached, top_k=3)
+    assert calls["n"] == 1, "a materialized cache was counted"
+
+
+def _broadcast_sides(df) -> list[set]:
+    """Column names of every join side carrying a broadcast hint in the
+    optimized plan."""
+    sides, stack = [], [df._jdf.queryExecution().optimizedPlan()]
+    while stack:
+        node = stack.pop()
+        if node.getClass().getSimpleName() == "Join":
+            h = node.hint()
+            for info, child in ((h.leftHint(), node.left()), (h.rightHint(), node.right())):
+                if info.isDefined() and "broadcast" in info.get().toString().lower():
+                    out = child.output()
+                    sides.append({out.apply(i).name() for i in range(out.size())})
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return sides
+
+
+def test_rerank_query_side_bounded_by_bytes(spark):
+    """ADVICE (medium): the re-rank query side carries whole vectors, so
+    it is sized by bytes (dim × 8 + id per row), not by the probe-key row
+    verdict.  A 125k × 768 side (~770 MB) gets no hint on the re-rank
+    join while its narrow probe keys may; a 100-row side is hinted.
+    Plans only — the Range-backed sides are sized from plan statistics."""
+    from lsh_rs_spark.config import MIPSConfig, SRPConfig
+    from lsh_rs_spark.operators.ann import ann_topk
+    from lsh_rs_spark.operators.l2_lsh import l2_knn
+    from lsh_rs_spark.operators.mips_ops import mips_topk
+
+    dim = 768
+    corpus = spark.range(1000).select(
+        F.col("id").alias("vec_id"), F.array_repeat(F.lit(0.0), dim).alias("embedding")
+    )
+    builders = {
+        "ann_topk": lambda q: ann_topk(q, corpus, SRPConfig(dim=dim), 5),
+        "mips_topk": lambda q: mips_topk(q, corpus, MIPSConfig(dim=dim), 5, M=1.0),
+        "l2_knn": lambda q: l2_knn(q, corpus, 2, 4, dim, 4.0, 42, top_k=5),
+    }
+    for name, build in builders.items():
+        for n, want in ((125_000, False), (100, True)):
+            q = spark.range(n).select(
+                F.col("id").alias("vec_id"),
+                F.array_repeat(F.lit(0.0), dim).alias("embedding"),
+            )
+            # the re-rank query side: hinted, keyed by query_id, no band key
+            # (its constant vector column may be folded out of the side)
+            hinted = any(
+                "query_id" in side and "band_key" not in side
+                for side in _broadcast_sides(build(q))
+            )
+            assert hinted is want, (name, n)
+
+
+def _record_prune_hints(monkeypatch, cls) -> list[bool]:
+    """Patch ``localCheckpoint`` to record whether each checkpointed plan
+    carries a broadcast hint — verify's participant prune is checkpointed,
+    so its hint is invisible in the final plan."""
+    seen: list[bool] = []
+    orig = cls.localCheckpoint
+
+    def recording(self, *args, **kwargs):
+        plan = self._jdf.queryExecution().optimizedPlan().toString().lower()
+        seen.append("broadcast" in plan)
+        return orig(self, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "localCheckpoint", recording)
+    return seen
+
+
+def test_verify_prune_never_reuses_a_stale_size(spark, tmp_path, monkeypatch):
+    """A file-backed pair table is sized from plan statistics on every
+    call: overwriting the same path with a table over the cap drops the
+    prune's broadcast hint on the next call."""
+    from lsh_rs_spark import tuning
+    from lsh_rs_spark.operators.verify import jaccard_edges
+
+    sig = spark.createDataFrame(
+        [(i, [i, i + 1, 10**6]) for i in range(60)], "doc_id long, shingles array<long>"
+    )
+    path = str(tmp_path / "pairs")
+
+    def write_pairs(n):
+        spark.range(n).selectExpr("id AS src", "id + 1 AS dst").write.mode(
+            "overwrite").parquet(path)
+
+    def edges():
+        e = jaccard_edges(spark.read.parquet(path), sig, CFG)
+        return {(r.src, r.dst) for r in e.select("src", "dst").distinct().collect()}
+
+    monkeypatch.setattr(tuning, "BROADCAST_BYTE_CAP", 2 * tuning.ID_BYTES * 1000)
+    seen = _record_prune_hints(monkeypatch, type(sig))
+    write_pairs(10)
+    small = edges()
+    write_pairs(200_000)
+    big = edges()
+    assert seen == [True, False]
+    assert len(small) == 10 and small <= big  # the big table holds the small one
+
+
+def test_verify_prune_counts_materialized_pairs_once(spark, monkeypatch):
+    """ADVICE (low): two ``jaccard_edges`` calls over one checkpointed
+    pair table run at most one (memoized) count job and both hint the
+    prune; pairs with live lineage are never executed to size them."""
+    from lsh_rs_spark import tuning
+    from lsh_rs_spark.operators.lsh import candidate_pairs, explode_bands, signatures
+    from lsh_rs_spark.operators.verify import jaccard_edges
+
+    tuning._COUNT_MEMO.clear()
+    sig = signatures(_docs(spark), CFG).cache()
+    live = candidate_pairs(explode_bands(sig, CFG), CFG)
+    pairs = live.localCheckpoint(eager=True)
+
+    calls = {"n": 0}
+    cls = type(pairs)
+    orig = cls.count
+
+    def counting(self):
+        calls["n"] += 1
+        return orig(self)
+
+    monkeypatch.setattr(cls, "count", counting)
+    seen = _record_prune_hints(monkeypatch, cls)
+    jaccard_edges(pairs, sig, CFG)
+    jaccard_edges(pairs, sig, CFG)
+    assert calls["n"] <= 1, f"count job ran {calls['n']}x for 2 calls"
+    assert seen == [True, True]
+    before = calls["n"]
+    jaccard_edges(live, sig, CFG)
+    assert calls["n"] == before, "live-lineage pairs were counted"
+    assert seen[-1] is False
 
 
 def test_l2_knn_validates_before_count_job(spark, emb, monkeypatch):
