@@ -88,16 +88,21 @@ def stream_exact_dedup(pages: DataFrame, delay: str = "10 minutes") -> DataFrame
     )
 
 
-def _read_if_exists(spark: SparkSession, path: str) -> DataFrame | None:
+def _read_if_exists(
+    spark: SparkSession, path: str, schema=None
+) -> DataFrame | None:
     """spark.read.parquet(path) or None if the path does not exist.
 
     Probes through Spark (AnalysisException on a missing path) rather than
     driver-local ``os.path.exists`` — on HDFS/S3 a local stat would read an
-    existing store as absent and silently skip the new-vs-stored probe."""
+    existing store as absent and silently skip the new-vs-stored probe.
+    With ``schema`` (a store whose schema the caller already knows) the
+    read is pinned to it and runs no schema-inference job."""
     from pyspark.errors import AnalysisException
 
+    reader = spark.read if schema is None else spark.read.schema(schema)
     try:
-        df = spark.read.parquet(path)
+        df = reader.parquet(path)
         df.schema  # force resolution now, not at first action
         return df
     except AnalysisException:
@@ -153,10 +158,21 @@ def _incremental_processor(
     incrementally.  ``sign_fn(batch_df) → sig``, ``band_fn(sig) →
     (band_idx, band_key, doc_id)``, ``verify_fn(pairs, all_sig) → edges``;
     ``sig_cols`` is what the signature store persists (what verify needs).
+
+    Each per-batch intermediate is computed once: the hot set is ONE
+    collect over the batch's keys (its joins use a local table of just
+    those keys), the candidate pairs are checkpointed before verify so
+    verify's participant prune and the edge write read the same rows, and
+    every store read is pinned to the schema the batch already holds (no
+    schema-inference job).  Cached blocks are released even when the batch
+    raises, so a replayed batch does not stack a second copy.
     """
     import json
     import os
     import uuid
+
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
 
     from lsh_rs_spark.operators.lsh import pairs_from_buckets
 
@@ -168,20 +184,17 @@ def _incremental_processor(
     metrics_dir = f"{workdir}/metrics"
     KEY = ["band_idx", "band_key"]
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if format_fingerprint:
-            _check_or_write_format(workdir, format_fingerprint, spark, buckets_dir)
-        metrics: dict = {"batch_id": batch_id}
-        sig = sign_fn(batch_df).persist()
-        new_buckets = band_fn(sig).persist()
-        batch_counts = (
-            new_buckets.groupBy(*KEY).agg(F.count("*").alias("n")).persist()
-        )
-
-        # -- incremental hot-set maintenance (O(batch) + O(hot)) ---------
-        prev_hot = _read_if_exists(spark, hot_dir)
-        counts_log = _read_if_exists(spark, counts_dir)
+    def hot_keys(spark, batch_counts: DataFrame, metrics: dict):
+        """(hot, newly_hot): the batch keys that are hot — already in
+        ``hot_buckets`` or past the cap once this batch is counted — and
+        the newly hot subset, as local tables (None when nothing turned
+        hot); fills the three hot-guard metrics.  A key can only turn hot
+        in a batch that touches it, and every hot join is against batch
+        keys, so the batch's share of the hot set is exact."""
+        key_schema = batch_counts.select(*KEY).schema
+        prev_hot = _read_if_exists(spark, hot_dir, key_schema)
+        counts_log = _read_if_exists(spark, counts_dir, batch_counts.schema)
+        cum, n_cum = batch_counts, F.col("n")
         if counts_log is not None:
             # cumulative sizes for THIS batch's keys only: count-log scan
             # restricted by a broadcast semi-join on the batch keys (3 int
@@ -191,81 +204,112 @@ def _incremental_processor(
                 .groupBy(*KEY)
                 .agg(F.sum("n").alias("n_prior"))
             )
-        else:
-            prior = None
-        if prior is not None:
-            cum = batch_counts.join(prior, KEY, "left").select(
-                *KEY,
-                (F.col("n") + F.coalesce(F.col("n_prior"), F.lit(0))).alias("n_cum"),
-            )
-        else:
-            cum = batch_counts.select(*KEY, F.col("n").alias("n_cum"))
-        newly_hot = cum.where(F.col("n_cum") > max_bucket_size).select(*KEY)
+            cum = cum.join(prior, KEY, "left")
+            n_cum = n_cum + F.coalesce("n_prior", F.lit(0))
+        was_hot = F.lit(False)
         if prev_hot is not None:
-            newly_hot = newly_hot.join(F.broadcast(prev_hot), KEY, "left_anti")
-        newly_hot = newly_hot.persist()
-        metrics["newly_hot_buckets"] = newly_hot.count()
-        hot = (
-            prev_hot.unionByName(newly_hot) if prev_hot is not None else newly_hot
-        ).persist()
-        metrics["hot_buckets_total"] = hot.count()
-
-        # -- probe: new keys vs stored keys (new×old), plus new×new ------
-        # hot-bucket guard: a boilerplate bucket past the cap would fan
-        # every colliding new doc out against its whole membership.  The
-        # guard covers BOTH probe directions — new×stored AND intra-batch
-        # new×new — so streaming matches batch semantics (batch drops a hot
-        # bucket entirely; a globally-hot but batch-locally-small key must
-        # not leak intra pairs).  Guarded rows are counted, not silently
-        # dropped (ADVICE r2/r3).
-        hot_new = new_buckets.join(F.broadcast(hot), KEY, "left_semi")
-        metrics["probe_rows_skipped_hot"] = hot_new.count()
-        probed = new_buckets.join(F.broadcast(hot), KEY, "left_anti")
-        intra = pairs_from_buckets(probed, KEY, max_bucket_size)
-        store = _read_if_exists(spark, buckets_dir)
-        if store is not None:
-            store = store.join(F.broadcast(hot), KEY, "left_anti")
-            probe = probed.alias("nb").join(
-                store.alias("st"), KEY
-            ).select(
-                F.col("nb.doc_id").alias("src_new"),
-                F.col("st.doc_id").alias("dst_old"),
-            ).where(F.col("src_new") != F.col("dst_old")).select(
-                F.least("src_new", "dst_old").alias("src"),
-                F.greatest("src_new", "dst_old").alias("dst"),
-            ).distinct()
-            pairs = probe.unionByName(intra).distinct()
-            all_sig = spark.read.parquet(sig_dir).unionByName(
-                sig.select(*sig_cols)
+            cum = cum.join(
+                F.broadcast(prev_hot.withColumn("was_hot", F.lit(True))), KEY, "left"
             )
-        else:
-            pairs = intra
-            all_sig = sig
-        edges = verify_fn(pairs, all_sig)
-        edges.write.mode("append").parquet(edges_dir)
-        new_buckets.write.mode("append").parquet(buckets_dir)
-        sig.select(*sig_cols).write.mode("append").parquet(sig_dir)
+            was_hot = F.coalesce("was_hot", F.lit(False))
+        hot = {
+            (r.band_idx, r.band_key): (r.n, r.was_hot)
+            for r in cum.where(was_hot | (n_cum > max_bucket_size))
+            .select(*KEY, "n", was_hot.alias("was_hot"))
+            .collect()
+        }
+        newly_hot = [k for k, (_, was) in hot.items() if not was]
+        metrics["newly_hot_buckets"] = len(newly_hot)
+        metrics["hot_buckets_total"] = len(newly_hot) + (
+            prev_hot.count() if prev_hot is not None else 0
+        )
+        metrics["probe_rows_skipped_hot"] = sum(n for n, _ in hot.values())
 
-        # -- maintenance appends ------------------------------------------
-        batch_counts.write.mode("append").parquet(counts_dir)
-        if metrics["newly_hot_buckets"]:
-            newly_hot.write.mode("append").parquet(hot_dir)
-        if compact_every and (batch_id + 1) % compact_every == 0:
-            compacted = (
-                spark.read.parquet(counts_dir)
-                .groupBy(*KEY)
-                .agg(F.sum("n").alias("n"))
-                .localCheckpoint(eager=True)  # sever lineage before overwrite
+        arrow_schema = to_arrow_schema(key_schema)
+
+        def local(keys) -> DataFrame:
+            rows = [dict(zip(KEY, k)) for k in keys]
+            return spark.createDataFrame(pa.Table.from_pylist(rows, schema=arrow_schema))
+
+        return local(hot), (local(newly_hot) if newly_hot else None)
+
+    def process(batch_df: DataFrame, batch_id: int) -> None:
+        spark = batch_df.sparkSession
+        if format_fingerprint:
+            _check_or_write_format(workdir, format_fingerprint, spark, buckets_dir)
+        metrics: dict = {"batch_id": batch_id}
+        cached: list[DataFrame] = []
+
+        def persist(df: DataFrame) -> DataFrame:
+            cached.append(df.persist())
+            return df
+
+        try:
+            sig = persist(sign_fn(batch_df))
+            new_buckets = persist(band_fn(sig))
+            batch_counts = persist(
+                new_buckets.groupBy(*KEY).agg(F.count("*").alias("n"))
             )
-            compacted.coalesce(4).write.mode("overwrite").parquet(counts_dir)
-            metrics["counts_log_compacted"] = True
+            hot_table, newly_hot = hot_keys(spark, batch_counts, metrics)
+            hot = F.broadcast(hot_table)
+
+            # -- probe: new keys vs stored keys (new×old), plus new×new --
+            # hot-bucket guard: a boilerplate bucket past the cap would fan
+            # every colliding new doc out against its whole membership.  The
+            # guard covers BOTH probe directions — new×stored AND intra-batch
+            # new×new — so streaming matches batch semantics (batch drops a
+            # hot bucket entirely; a globally-hot but batch-locally-small key
+            # must not leak intra pairs).  Guarded rows are counted, not
+            # silently dropped (ADVICE r2/r3).
+            probed = new_buckets.join(hot, KEY, "left_anti")
+            intra = pairs_from_buckets(probed, KEY, max_bucket_size)
+            store = _read_if_exists(spark, buckets_dir, new_buckets.schema)
+            sig_store = sig.select(*sig_cols)
+            pairs, all_sig = intra, sig
+            if store is not None:
+                store = store.join(hot, KEY, "left_anti")
+                probe = probed.alias("nb").join(
+                    store.alias("st"), KEY
+                ).select(
+                    F.col("nb.doc_id").alias("src_new"),
+                    F.col("st.doc_id").alias("dst_old"),
+                ).where(F.col("src_new") != F.col("dst_old")).select(
+                    F.least("src_new", "dst_old").alias("src"),
+                    F.greatest("src_new", "dst_old").alias("dst"),
+                ).distinct()
+                pairs = probe.unionByName(intra).distinct()
+                all_sig = spark.read.schema(sig_store.schema).parquet(
+                    sig_dir
+                ).unionByName(sig_store)
+            # materialized once: verify's participant prune and the edge
+            # write both read these rows instead of re-running the probe
+            pairs = pairs.localCheckpoint(eager=True)
+            verify_fn(pairs, all_sig).write.mode("append").parquet(edges_dir)
+            new_buckets.write.mode("append").parquet(buckets_dir)
+            sig_store.write.mode("append").parquet(sig_dir)
+
+            # -- maintenance appends --------------------------------------
+            batch_counts.write.mode("append").parquet(counts_dir)
+            if newly_hot is not None:
+                newly_hot.write.mode("append").parquet(hot_dir)
+            if compact_every and (batch_id + 1) % compact_every == 0:
+                compacted = (
+                    spark.read.schema(batch_counts.schema)
+                    .parquet(counts_dir)
+                    .groupBy(*KEY)
+                    .agg(F.sum("n").alias("n"))
+                    .localCheckpoint(eager=True)  # sever lineage before overwrite
+                )
+                compacted.coalesce(4).write.mode("overwrite").parquet(counts_dir)
+                metrics["counts_log_compacted"] = True
+        finally:
+            for df in cached:
+                df.unpersist()
         os.makedirs(metrics_dir, exist_ok=True)
         tmp = os.path.join(metrics_dir, f".batch_{batch_id}_{uuid.uuid4().hex}.tmp")
         with open(tmp, "w") as f:
             json.dump(metrics, f)
         os.replace(tmp, os.path.join(metrics_dir, f"batch_{batch_id}.json"))
-        for df in (sig, new_buckets, batch_counts, newly_hot, hot):
-            df.unpersist()
 
     return process
 
@@ -304,10 +348,18 @@ def start_incremental_dedup(
     materialized set of keys whose cumulative size crossed
     ``cfg.max_bucket_size``.  A key can only become hot in a batch that
     touches it, so the hot update scans the count log restricted to the
-    batch's keys (broadcast semi-join); the probe stage reads O(batch) new
-    rows + the O(hot-keys) table — never re-aggregates the store.  Rows the
-    guard excludes are COUNTED per batch (``{workdir}/metrics``), matching
-    the batch path's dropped/capped counters — drops are never silent.
+    batch's keys (broadcast semi-join) in ONE collect that returns the
+    batch's hot keys; the metrics come from those rows on the driver and
+    the probe's guard joins a local table of just those keys — never
+    re-aggregates the store.  Rows the guard excludes are COUNTED per
+    batch (``{workdir}/metrics``), matching the batch path's
+    dropped/capped counters — drops are never silent.
+
+    Fixed per-batch cost is kept to one pass per intermediate: the
+    candidate pairs are checkpointed once and feed both verify's
+    participant prune and the edge write, and every store read is pinned
+    to the schema the batch already holds, so no read runs a
+    schema-inference job.
 
     The bucket store is the growing index (parquet here; Iceberg/Delta on a
     real deployment for snapshot isolation); each batch's shuffle is

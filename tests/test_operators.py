@@ -626,6 +626,213 @@ def test_streaming_workdir_format_fingerprint_fail_fast(spark, tmp_path):
     assert "different format/config" in str(ei.value)
 
 
+STREAM_SCHEMA = ("url STRING, warc_ts TIMESTAMP, html BINARY, text STRING, "
+                 "lang STRING, doc_id LONG")
+
+
+def _drain_incremental(spark, batches, cfg, tmp_path):
+    """Write one parquet file per micro-batch of (doc_id, text) rows and
+    drain them through ``start_incremental_dedup``; returns (query, work)."""
+    from lsh_rs_spark.streaming import ingest as SI
+
+    src = str(tmp_path / "src")
+    for rows in batches:
+        spark.createDataFrame(
+            [(f"http://x/{i}", None, None, t, "en", i) for i, t in rows],
+            STREAM_SCHEMA,
+        ).coalesce(1).write.mode("append").parquet(src)
+    stream = (
+        spark.readStream.schema(STREAM_SCHEMA)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
+    work = str(tmp_path / "work")
+    q = SI.start_incremental_dedup(stream, cfg, work)
+    q.awaitTermination(120)
+    return q, work
+
+
+def test_streaming_hot_set_restricted_to_batch_keys(spark, tmp_path):
+    """Keys turn hot in different micro-batches: A and D in batch 0, B in
+    batch 1 (2 + 2 rows > cap).  Batch 2 carries A and B again (hot from
+    earlier batches) and C, whose bucket stays at the cap and collides
+    with two stored docs; D is hot but absent from batch 2.  Every batch's
+    hot-guard metrics, the hot_buckets rows and the edge set equal a
+    reference replayed from the final store."""
+    import glob
+    import json
+    import random
+    from collections import defaultdict
+
+    cap = 3
+    cfg = DedupConfig(num_perm=16, bands=4, rows_per_band=4,
+                      hash_family="xxhash64", jaccard_threshold=0.5,
+                      max_bucket_size=cap)
+    rng = random.Random(7)
+
+    def text():
+        return " ".join(f"w{rng.randrange(5000)}" for _ in range(40))
+
+    A, B, C, D = text(), text(), text(), text()
+    texts = [
+        [A] * 4 + [D] * 4 + [B] * 2 + [C] + [text() for _ in range(5)],
+        [B] * 2 + [C] + [text() for _ in range(5)],
+        [A, B, C] + [text() for _ in range(5)],
+    ]
+    batch_of, batches = {}, []
+    for b, ts in enumerate(texts):
+        batches.append([(len(batch_of) + j, t) for j, t in enumerate(ts)])
+        batch_of.update({i: b for i, _ in batches[-1]})
+    _, work = _drain_incremental(spark, batches, cfg, tmp_path)
+
+    # reference: replay the guard over the final store, batch by batch
+    members = defaultdict(list)
+    for r in spark.read.parquet(f"{work}/buckets").collect():
+        members[(r.band_idx, r.band_key)].append(r.doc_id)
+    shingles = {
+        r.doc_id: set(r.shingles)
+        for r in spark.read.parquet(f"{work}/signatures").collect()
+    }
+    hot, want_metrics, candidates = set(), [], set()
+    for b in range(len(batches)):
+        keys = {k for k, ds in members.items() if any(batch_of[d] == b for d in ds)}
+        now_hot = {
+            k for k in keys if sum(batch_of[d] <= b for d in members[k]) > cap
+        }
+        want_metrics.append({
+            "newly_hot_buckets": len(now_hot - hot),
+            "hot_buckets_total": len(hot | now_hot),
+            "probe_rows_skipped_hot": sum(
+                batch_of[d] == b for k in now_hot for d in members[k]
+            ),
+        })
+        hot |= now_hot
+        for k in keys - hot:
+            new = [d for d in members[k] if batch_of[d] == b]
+            seen = [d for d in members[k] if batch_of[d] <= b]
+            candidates |= {(min(x, y), max(x, y)) for x in new for y in seen if x != y}
+
+    def jaccard(x, y):
+        return len(shingles[x] & shingles[y]) / len(shingles[x] | shingles[y])
+
+    want_edges = {p for p in candidates if jaccard(*p) >= cfg.jaccard_threshold}
+
+    # the fixture realizes the scenario the docstring describes
+    assert want_metrics == [
+        {"newly_hot_buckets": 8, "hot_buckets_total": 8, "probe_rows_skipped_hot": 32},
+        {"newly_hot_buckets": 4, "hot_buckets_total": 12, "probe_rows_skipped_hot": 8},
+        {"newly_hot_buckets": 0, "hot_buckets_total": 12, "probe_rows_skipped_hot": 8},
+    ]
+    ids = {t: [i for i, x in (r for rs in batches for r in rs) if x == t] for t in (B, C)}
+    c0, c1, c2 = ids[C]
+    assert {(ids[B][0], ids[B][1]), (c0, c1), (c0, c2), (c1, c2)} <= want_edges
+
+    got_metrics = []
+    for b in range(len(batches)):
+        with open(f"{work}/metrics/batch_{b}.json") as f:
+            m = json.load(f)
+        got_metrics.append({k: m[k] for k in want_metrics[0]})
+    assert len(glob.glob(f"{work}/metrics/batch_*.json")) == len(batches)
+    assert got_metrics == want_metrics
+    hot_rows = [
+        (r.band_idx, r.band_key)
+        for r in spark.read.parquet(f"{work}/hot_buckets").collect()
+    ]
+    assert sorted(hot_rows) == sorted(hot)
+    edges = spark.read.parquet(f"{work}/edges").select("src", "dst").collect()
+    assert len(edges) == len(want_edges)
+    assert {(r.src, r.dst) for r in edges} == want_edges
+
+
+#: jobs one two-file incremental drain runs in the query's job group: 45
+#: when measured (local[4], the session fixture's config); a body that
+#: re-runs the candidate-pair DAG, counts the hot set in separate jobs and
+#: infers store schemas runs 70
+INCREMENTAL_DRAIN_MAX_JOBS = 52
+
+
+def test_streaming_incremental_no_intermediate_recomputed(spark, tmp_path):
+    """Each micro-batch computes its intermediates once: the jobs of a
+    two-file drain, counted in the query's runId job group (the group
+    Spark gives every job of a foreachBatch body), stay under a bound that
+    a body re-running the pair DAG or its count jobs exceeds."""
+    from lsh_rs_spark.sources.webpages import synth_webpages, with_doc_ids
+
+    cfg = DedupConfig(num_perm=16, bands=4, rows_per_band=4,
+                      hash_family="xxhash64", jaccard_threshold=0.5)
+    pages = with_doc_ids(synth_webpages(spark, 150, partitions=2))
+    rows = [(r.doc_id, r.text) for r in pages.select("doc_id", "text").collect()]
+    batches = [[r for r in rows if r[0] % 2 == p] for p in (0, 1)]
+    q, work = _drain_incremental(spark, batches, cfg, tmp_path)
+
+    assert spark.read.parquet(f"{work}/edges").count() > 0
+    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
+    assert 0 < len(jobs) <= INCREMENTAL_DRAIN_MAX_JOBS
+
+
+def test_streaming_legacy_workdir_without_marker_fails_fast(spark, tmp_path):
+    """A workdir holding a bucket store but no _FORMAT.json marker (written
+    by code that predates the marker, or by another tool) cannot be
+    checked for compatibility: the first batch raises before probing."""
+    from py4j.protocol import Py4JJavaError
+    from pyspark.errors import StreamingQueryException
+
+    from lsh_rs_spark.streaming import ingest as SI
+
+    cfg = DedupConfig(num_perm=16, bands=4, rows_per_band=4,
+                      hash_family="xxhash64", jaccard_threshold=0.5)
+    work = tmp_path / "work"
+    spark.createDataFrame(
+        [(0, "k", 1)], "band_idx INT, band_key STRING, doc_id LONG"
+    ).write.parquet(str(work / "buckets"))
+    src = str(tmp_path / "src")
+    spark.createDataFrame(
+        [("http://x/1", None, None, "some page text " * 4, "en", 1)], STREAM_SCHEMA
+    ).write.parquet(src)
+    q = SI.start_incremental_dedup(
+        spark.readStream.schema(STREAM_SCHEMA).parquet(src), cfg, str(work)
+    )
+    with pytest.raises((StreamingQueryException, Py4JJavaError)) as ei:
+        q.awaitTermination(120)
+        if q.exception() is not None:
+            raise q.exception()
+    assert "has a bucket store but no _FORMAT.json marker" in str(ei.value)
+    assert not (work / "_FORMAT.json").exists()
+    assert not (work / "edges").exists()
+
+
+def test_streaming_failed_batch_releases_cached_blocks(spark, tmp_path):
+    """A micro-batch that raises still unpersists what it cached; the
+    checkpoint replays it, and a leak would stack one copy per attempt."""
+    from pyspark import StorageLevel
+
+    from lsh_rs_spark.sources.webpages import synth_webpages, with_doc_ids
+    from lsh_rs_spark.streaming import ingest as SI
+
+    made = []
+
+    def keep(df):
+        made.append(df)
+        return df
+
+    def failing_verify(pairs, all_sig):
+        raise RuntimeError("verify failed")
+
+    process = SI._incremental_processor(
+        str(tmp_path / "work"),
+        sign_fn=lambda b: keep(L.signatures(b, CFG)),
+        band_fn=lambda s: keep(L.explode_bands(s, CFG)),
+        verify_fn=failing_verify,
+        sig_cols=["doc_id", "shingles"],
+        max_bucket_size=CFG.max_bucket_size,
+        compact_every=0,
+    )
+    with pytest.raises(RuntimeError, match="verify failed"):
+        process(with_doc_ids(synth_webpages(spark, 30, partitions=1)), 0)
+    assert len(made) == 2
+    assert all(df.storageLevel == StorageLevel.NONE for df in made)
+
+
 def test_simhash_fused_pairing_equals_decomposed_form(spark):
     """The fused pair+verify plan (simhash_pairs_from_sketches) must emit
     exactly the candidate_pairs -> hamming_edges decomposition's edge set —
