@@ -129,10 +129,6 @@ ORACLE_CONFIG = DedupConfig(
 #: xxhash64 shingle ids (JVM-fast) + OPH signatures (O(shingles) kernel).
 PIPELINE_CONFIG = DedupConfig(hash_family="xxhash64", minhash_mode="oph")
 
-#: Reference-semantics production config (K independent hashes, exact parity
-#: with the oracle family at any scale) — slower kernel, identical recall laws.
-PIPELINE_CONFIG_KPERM = DedupConfig()
-
 
 @dataclass(frozen=True)
 class SimHashConfig:

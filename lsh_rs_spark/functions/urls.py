@@ -21,8 +21,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, functions as F
 
-_TRACKING = ("utm_", "gclid", "fbclid")
-
 
 def url_canonicalize(url) -> Column:
     u = F.col(url) if isinstance(url, str) else url

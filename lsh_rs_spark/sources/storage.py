@@ -136,13 +136,19 @@ class StageStore:
         Backend dispatch: an Iceberg catalog routes data through
         ``df.writeTo(catalog.ns.name)`` (atomic table replace — Iceberg's
         snapshot commit IS the data commit point); otherwise plain parquet
-        behind an atomic directory swap.  Both branches seal the stage with
-        the SAME manifest (written after the data commit, so a crash
-        between data and manifest reruns the idempotent stage write)."""
+        behind an atomic directory swap.  Both branches unseal the stage
+        before replacing its data and seal it with the SAME manifest after
+        the data commit, so a crash anywhere in between reruns the
+        idempotent stage write."""
         t0 = time.time()
         if sort_within:
             df = df.sortWithinPartitions(*sort_within)
         if self.use_iceberg:
+            # the table replace leaves the stage dir alone (the parquet
+            # branch removes it): drop the old manifest first, or a crash
+            # before _seal leaves it vouching for the new data
+            if self.is_committed(name):
+                os.remove(self._manifest_path(name))
             written = self._write_iceberg(df, name, partition_by)
         else:
             written = self._write_parquet(df, name, partition_by)

@@ -145,12 +145,12 @@ def best_params(results: list[OptResult], n_total: int, n_sample: int) -> OptRes
 
 
 #: Measured shuffle volume per input document for the dedup pipeline's two
-#: heavy exchanges (tools/stage_bytes.py on the 5.6M-doc synthetic web
-#: corpus, round 6): candidate-pair emission ~310 B/doc (folded band keys
-#: x bands, map-side-distinct pairs), exact-verify join-backs ~1.7 kB/doc
-#: (pruned shingle arrays crossing two joins).  Used for partition sizing;
-#: corpora with much longer documents should scale these by
-#: avg_doc_bytes/750.
+#: heavy exchanges (event-log task metrics on the 5.6M-doc synthetic web
+#: corpus, BASELINE.md round-6 item 3): candidate-pair emission ~310 B/doc
+#: (folded band keys x bands, map-side-distinct pairs), exact-verify
+#: join-backs ~1.7 kB/doc (pruned shingle arrays crossing two joins).  Used
+#: for partition sizing; corpora with much longer documents should scale
+#: these by avg_doc_bytes/750.
 PAIRS_SHUFFLE_BYTES_PER_DOC = 310
 EDGES_SHUFFLE_BYTES_PER_DOC = 1690
 
@@ -174,8 +174,8 @@ def suggest_shuffle_partitions(
       the per-task memory share on the 5.6M-doc corpus and triggered
       external-sort spill on BOTH heavy stages (pairs 2.0 GB, edges
       4.7 GB spilled at 8 cores); at 4x cores the spill disappeared and
-      the 8-core leg ran 18% faster end to end (tools/stage_bytes.py
-      A/B, round 6).
+      the 8-core leg ran 18% faster end to end (round-6 A/B, BASELINE.md
+      round-6 items 3-4).
     * **waves** — at least 2 tasks per core so a straggler costs a
       fraction of a wave, the standard sizing guidance.
 
@@ -503,7 +503,7 @@ def calibrate_shuffle_constants(spark, docs: DataFrame) -> dict:
     :func:`suggest_shuffle_partitions`.
 
     The module defaults (310 / 1690 B/doc) were measured on the synthetic
-    web corpus (tools/stage_bytes.py, round 6); corpora with different
+    web corpus (BASELINE.md round-6 item 3); corpora with different
     document lengths, dup rates or shingle densities shift them.  Both
     heavy exchanges are O(n_docs), so constants measured on a ~100k-doc
     sample extrapolate linearly — run this once per new corpus family and

@@ -154,3 +154,38 @@ def test_multi_stage_graph_through_real_catalog_with_resume(catalog_spark, tmp_p
     assert got == {(1, 1), (2, 1), (3, 1), (10, 10), (11, 10)}
     for stage in s2.stages():
         s2.drop(stage)
+
+
+def test_catalog_crashed_replace_unseals_stage(catalog_spark, tmp_path, monkeypatch):
+    """A replace that commits new table data but dies before ``_seal`` must
+    not leave the previous run's manifest vouching for it: a fresh store
+    either sees the stage uncommitted (and reruns it) or reads the data
+    that manifest describes — never the crashed run's rows under the old
+    config.  Only ``_seal`` is patched; the table replace is real."""
+    spark = catalog_spark
+    root = str(tmp_path / "crash")
+
+    def mk_store(fingerprint):
+        return StageStore(
+            spark, root, config_fingerprint=fingerprint, use_iceberg=True,
+            catalog=CAT, table_format=None, namespace="crash_it",
+        )
+
+    def ids(lo, hi):
+        return spark.range(lo, hi).withColumnRenamed("id", "doc_id")
+
+    mk_store("cfgA").write(ids(0, 5), "edges")
+
+    s_b = mk_store("cfgB")
+
+    def crash(name, manifest):
+        raise RuntimeError("killed before seal")
+
+    monkeypatch.setattr(s_b, "_seal", crash)
+    with pytest.raises(RuntimeError, match="killed before seal"):
+        s_b.write(ids(100, 107), "edges")
+
+    s_a = mk_store("cfgA")
+    if s_a.is_committed("edges"):
+        assert {r.doc_id for r in s_a.read("edges").collect()} == set(range(5))
+    s_a.drop("edges")

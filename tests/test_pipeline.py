@@ -120,6 +120,36 @@ def test_pipeline_checkpoint_resume(spark, tmp_path):
     assert "resumed" not in p3.metrics["edges"]
 
 
+def test_pipeline_killed_before_seal_resumes_to_cold_keep_list(spark, tmp_path, monkeypatch):
+    """A run killed between the data commit and the seal of a stage leaves
+    that stage uncommitted: rerunning the original config with resume
+    recomputes it (not 'resumed') and reaches the cold keep list."""
+    from lsh_rs_spark.sources.storage import StageStore
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").limit(200)
+    wd = str(tmp_path / "run")
+    keep_cold = DedupPipeline(spark, CFG, wd).run(docs, resume=False)
+    keep_cold = keep_cold.orderBy("doc_id").collect()
+
+    seal = StageStore._seal
+
+    def seal_or_crash(self, name, manifest):
+        if name == "edges":
+            raise RuntimeError("killed before seal")
+        seal(self, name, manifest)
+
+    cfg2 = DedupConfig(num_perm=16, bands=4, rows_per_band=4, jaccard_threshold=0.8)
+    with monkeypatch.context() as m:
+        m.setattr(StageStore, "_seal", seal_or_crash)
+        with pytest.raises(RuntimeError, match="killed before seal"):
+            DedupPipeline(spark, cfg2, wd).run(docs, resume=True)
+
+    p3 = DedupPipeline(spark, CFG, wd)
+    keep = p3.run(docs, resume=True).orderBy("doc_id").collect()
+    assert keep == keep_cold
+    assert "resumed" not in p3.metrics["edges"]
+
+
 def test_skew_guard_drops_hot_bucket(spark):
     # 50 identical docs → one bucket of 50 per band; cap=10 must drop it
     docs = spark.createDataFrame(

@@ -1,16 +1,18 @@
-"""The scripts outside the package — ``tools/*.py``, ``bench.py``,
-``bench_extra.py``, the driver contract ``__spark_entry__.py`` and the
-benchmark ``perfbench/*.py`` — use only names that exist in
-``lsh_rs_spark``, so deleting a package name cannot leave a script
-importing or calling it.  Checked statically (``ast``): the scripts
-themselves are never run here.  Covered: ``from … import`` names, attribute
-references through module aliases (``SX.winnowing_anchors_kernel``,
-``TK.knn``, …) and the ``(module, attr)`` pairs the benchmark's tracer
-patches (``perfbench/tracing.PLAN_FUNCTIONS``)."""
+"""The scripts outside the package — ``tools/*.py``, ``bench.py``, the
+driver contract ``__spark_entry__.py`` and the benchmark
+``perfbench/*.py`` — use only names that exist in ``lsh_rs_spark``, so
+deleting a package name cannot leave a script importing or calling it;
+and a tool importing a sibling tool names one that still exists.  Checked
+statically (``ast``): the scripts themselves are never run here.  Covered:
+``from … import`` names, attribute references through module aliases
+(``SX.winnowing_anchors_kernel``, ``TK.knn``, …) and the ``(module,
+attr)`` pairs the benchmark's tracer patches
+(``perfbench/tracing.PLAN_FUNCTIONS``)."""
 
 import ast
 import glob
 import importlib
+import importlib.util
 import os
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -19,9 +21,23 @@ SCRIPTS = sorted(
     + glob.glob(os.path.join(REPO, "perfbench", "*.py"))
 ) + [
     os.path.join(REPO, "bench.py"),
-    os.path.join(REPO, "bench_extra.py"),
     os.path.join(REPO, "__spark_entry__.py"),
 ]
+
+
+def _top_level_names(path):
+    """Names a module binds at its top level (defs, classes, assignments,
+    imports)."""
+    names = set()
+    for node in ast.parse(open(path).read(), path).body:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            names.add(node.name)
+        elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+            names.update(t.id for t in targets if isinstance(t, ast.Name))
+        elif isinstance(node, (ast.Import, ast.ImportFrom)):
+            names.update((a.asname or a.name).split(".")[0] for a in node.names)
+    return names
 
 
 def _package_imports(tree):
@@ -155,4 +171,33 @@ def test_benchmark_tracer_targets_exist():
     plan_functions = _plan_functions()
     assert plan_functions
     missing = [f"{m}.{a}" for m, a in plan_functions if not _resolves(m, a)]
+    assert not missing, missing
+
+
+def test_tools_sibling_imports_resolve():
+    """Every absolute import in ``tools/*.py`` (function bodies included)
+    either resolves outside ``tools/`` or names a ``tools/<mod>.py`` that
+    defines the imported names — deleting a tool cannot break a kept one."""
+    siblings = {
+        os.path.splitext(os.path.basename(p))[0]: p
+        for p in glob.glob(os.path.join(REPO, "tools", "*.py"))
+    }
+    missing = []
+    for path in sorted(siblings.values()):
+        for node in ast.walk(ast.parse(open(path).read(), path)):
+            if isinstance(node, ast.ImportFrom) and not node.level:
+                imports = [(node.module, [a.name for a in node.names])]
+            elif isinstance(node, ast.Import):
+                imports = [(a.name, []) for a in node.names]
+            else:
+                continue
+            for module, names in imports:
+                top = module.split(".")[0]
+                where = f"{os.path.relpath(path, REPO)}:{node.lineno}"
+                if top not in siblings:
+                    if importlib.util.find_spec(top) is None:
+                        missing.append(f"{where}: no module {top}")
+                    continue
+                undefined = set(names) - _top_level_names(siblings[top])
+                missing += [f"{where}: {top}.{n}" for n in sorted(undefined)]
     assert not missing, missing
