@@ -1,15 +1,14 @@
 """End-to-end near-duplicate detection & clustering pipeline.
 
 The production `spark-submit --py-files` job (north rule): every stage
-checkpoints through the StageStore with lineage counters; a killed job
-resumes from the last committed stage; metrics (bucket stats, dropped
-hot buckets, edge counts, docs/sec) land in the run manifest.
+checkpoints through the StageStore with lineage; a killed job resumes
+from the last committed stage; metrics (rows per stage, the ``buckets``
+skew counters of :func:`bucket_counters`, docs/sec) land in the run manifest.
 
 Stage graph::
 
-    docs ─ signatures ─ buckets ─┬─ bucket_stats (skew monitor)
-                                 ├─ dropped_buckets (cap counters)
-                                 └─ candidate_pairs ─ edges ─ components ─ keep_list
+    docs ─ exact_groups ─ signatures ─ buckets ─ candidate_pairs ─ edges
+         ─ components ─ keep_list
 
 plus the optional sub-document pass (``run_span_cleaning`` /
 ``--span-cleaning``): survivors ─ substring_spans ─ clean_docs.
@@ -26,6 +25,7 @@ pass it a :class:`MemoryStages` callback instead.
 from __future__ import annotations
 
 import argparse
+import contextlib
 import json
 import time
 
@@ -42,8 +42,6 @@ STAGES = (
     "exact_groups",
     "signatures",
     "buckets",
-    "bucket_stats",
-    "dropped_buckets",
     "candidate_pairs",
     "edges",
     "components",
@@ -62,28 +60,23 @@ class DedupPipeline:
         tests); default is the auto-detecting parquet/catalog store."""
         self.spark = spark
         self.cfg = cfg
-        self.store = store or StageStore(
-            spark, workdir, config_fingerprint=cfg.to_json()
-        )
-        if store is not None and not store.config_fingerprint:
-            store.config_fingerprint = cfg.to_json()
+        self.store = store or StageStore(spark, workdir)
+        if not self.store.config_fingerprint:
+            self.store.config_fingerprint = cfg.to_json()
         self.metrics: dict = {}
 
     def _stage(self, name: str, build, parents: tuple[str, ...], resume: bool, **kw):
-        if resume and self.store.is_committed(name):
-            m = self.store.manifest(name)
-            # compare against the STORE fingerprint (== cfg.to_json() for
-            # the dedup stages; span stages append their own params so a
-            # min_match change cannot silently resume stale spans)
-            if m.get("config") == self.store.config_fingerprint:
-                self.metrics[name] = {"rows": m["rows"], "resumed": True}
-                return self.store.read(name)
-            # config changed → stale checkpoint is not reusable
-        t0 = time.time()
-        df = build()
-        m = self.store.write(df, name, parents=parents, **kw)
-        m["seconds"] = round(time.time() - t0, 3)
-        self.metrics[name] = {"rows": m["rows"], "seconds": m["seconds"]}
+        m = self.store.manifest(name) if resume and self.store.is_committed(name) else {}
+        # reuse only under the STORE fingerprint (span and keep_list stages
+        # append their own params) and a JSON schema (a manifest from before
+        # schemas were pinned cannot be read without inference): else rerun
+        if m.get("config") == self.store.config_fingerprint and m["schema"].startswith("{"):
+            self.metrics[name] = {"rows": m["rows"], "resumed": True}
+        else:
+            t0 = time.time()
+            m = self.store.write(build(), name, parents=parents, **kw)
+            self.metrics[name] = {"rows": m["rows"], "seconds": round(time.time() - t0, 3)}
+        self.metrics[name]["counters"] = m["counters"]
         return self.store.read(name)
 
     def run(
@@ -107,12 +100,8 @@ class DedupPipeline:
             # policy rides the keep_list fingerprint ONLY: a resume never
             # mixes policies, while the policy-independent upstream stages
             # (edges, components, ...) stay reusable when switching policy
-            base_fp = self.store.config_fingerprint
-            self.store.config_fingerprint = base_fp + "|keep:" + keep_policy
-            try:
+            with self._fingerprint("|keep:" + keep_policy):
                 return self._stage(name, build, parents, resume, **kw)
-            finally:
-                self.store.config_fingerprint = base_fp
 
         keep = dedup_chain(
             docs, self.cfg, stage,
@@ -131,6 +120,15 @@ class DedupPipeline:
             json.dump(self.metrics, f, indent=1)
         return keep
 
+    @contextlib.contextmanager
+    def _fingerprint(self, suffix: str):
+        base = self.store.config_fingerprint
+        self.store.config_fingerprint = base + suffix
+        try:
+            yield
+        finally:
+            self.store.config_fingerprint = base
+
     def run_span_cleaning(
         self,
         docs: DataFrame,
@@ -141,11 +139,8 @@ class DedupPipeline:
         resume: bool = True,
     ) -> DataFrame:
         """Sub-document corpus cleaning (Lee et al. 2021 §4), checkpointed:
-        duplicated byte-range extraction → byte-true span stripping.
-
-        Stage graph::
-
-            docs ─ substring_spans ─ clean_docs
+        duplicated byte-range extraction (``substring_spans``) → byte-true
+        span stripping (``clean_docs``).
 
         Returns (doc_id, clean_text) for EVERY input doc (docs without a
         duplicated span pass through verbatim).  Complements ``run`` (doc-
@@ -163,34 +158,23 @@ class DedupPipeline:
              "max_group_docs": max_group_docs},
             sort_keys=True,
         )
-        base_fp = self.store.config_fingerprint
-        self.store.config_fingerprint = base_fp + "|span:" + span_fp
-        try:
-            return self._run_span_stages(docs, min_match, k_gram,
-                                         snippet_radius, max_group_docs,
-                                         resume, t_start)
-        finally:
-            self.store.config_fingerprint = base_fp
-
-    def _run_span_stages(self, docs, min_match, k_gram, snippet_radius,
-                         max_group_docs, resume, t_start):
-        from lsh_rs_spark.operators import suffix as SX
-
-        spans = self._stage(
-            "substring_spans",
-            lambda: SX.substring_dup_spans(
-                docs, min_match=min_match, k_gram=k_gram,
-                snippet_radius=snippet_radius, max_group_docs=max_group_docs,
-            ),
-            (),
-            resume,
-        )
-        clean = self._stage(
-            "clean_docs",
-            lambda: SX.strip_spans(docs, spans),
-            ("substring_spans",),
-            resume,
-        )
+        with self._fingerprint("|span:" + span_fp):
+            spans = self._stage(
+                "substring_spans",
+                lambda: SX.substring_dup_spans(
+                    docs, min_match=min_match, k_gram=k_gram,
+                    snippet_radius=snippet_radius,
+                    max_group_docs=max_group_docs,
+                ),
+                (),
+                resume,
+            )
+            clean = self._stage(
+                "clean_docs",
+                lambda: SX.strip_spans(docs, spans),
+                ("substring_spans",),
+                resume,
+            )
         self.metrics["span_summary"] = {
             "wall_seconds": round(time.time() - t_start, 3),
             "params": {"min_match": min_match, "k_gram": k_gram,
@@ -258,9 +242,8 @@ def dedup_chain(
         ("signatures",),
         partition_by=("band_idx",),
         sort_within=("band_key",),
+        counters=lambda b: bucket_counters(b, cfg),
     )
-    stage("bucket_stats", lambda: L.bucket_stats(buckets), ("buckets",))
-    stage("dropped_buckets", lambda: L.dropped_buckets(buckets, cfg), ("buckets",))
     pairs = stage(
         "candidate_pairs", lambda: L.candidate_pairs(buckets, cfg), ("buckets",)
     )
@@ -316,6 +299,20 @@ def dedup_chain(
     return stage("keep_list", build_keep, ("components", "signatures"))
 
 
+def bucket_counters(buckets: DataFrame, cfg: DedupConfig) -> dict:
+    """The skew monitor as one aggregate: the totals of ``L.bucket_stats``
+    and of ``L.dropped_buckets`` (buckets over ``max_bucket_size``)."""
+    size = F.col("bucket_size")
+    dropped = size > cfg.max_bucket_size
+    return L.bucket_sizes(buckets).agg(
+        F.count(F.lit(1)).alias("n_buckets"),
+        F.count(F.when(size > 1, 1)).alias("n_colliding_buckets"),
+        F.coalesce(F.max(size), F.lit(0)).alias("max_bucket_size"),
+        F.count(F.when(dropped, 1)).alias("dropped_buckets"),
+        F.coalesce(F.sum(F.when(dropped, size)), F.lit(0)).alias("dropped_entries"),
+    ).first().asDict()
+
+
 class MemoryStages:
     """``stage`` callback for :func:`dedup_chain` runs without a StageStore.
 
@@ -323,8 +320,8 @@ class MemoryStages:
     eagerly (lineage leaves: exact groups sit on both sides of a diamond —
     anti-join and edge union — and pairs/edges would otherwise recompute
     through verify and CC); signatures are persisted, since pairing and
-    verify both read them; every other stage stays lazy, so the skew
-    monitors (bucket_stats, dropped_buckets) are never evaluated.
+    verify both read them; every other stage stays lazy, and write options
+    (partitioning, sort, the ``buckets`` skew counters) are ignored.
     ``release()`` unpersists what was cached once the result is consumed.
     """
 

@@ -4,9 +4,9 @@ The reference persists engine state atomically (bincode dump
 `lsh-rs/src/lsh/lsh.rs:606-639`; SQLite transactions
 `lsh-rs/src/table/sqlite.rs:202-213`).  Our unit of durability is a
 *pipeline stage*: each stage's DataFrame is written once and sealed with an
-atomically-renamed ``_COMMITTED.json`` manifest carrying row counts,
-per-partition lineage counters, config fingerprint and parent stages — the
-north rule's checkpoint/resume + lineage requirement.
+atomically-renamed ``_COMMITTED.json`` manifest carrying rows (observed on
+the write), schema (JSON: reads infer nothing), stage counters, config
+fingerprint and parents — the north rule's checkpoint/resume + lineage.
 
 Backend selection: if the session has an Iceberg catalog configured
 (``spark.sql.catalog.*`` + runtime jar) tables go through it; otherwise a
@@ -26,8 +26,10 @@ import os
 import shutil
 import time
 from dataclasses import dataclass, field
+from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 MANIFEST = "_COMMITTED.json"
 
@@ -129,7 +131,7 @@ class StageStore:
         parents: tuple[str, ...] = (),
         partition_by: tuple[str, ...] = (),
         sort_within: tuple[str, ...] = (),
-        counters: dict | None = None,
+        counters: Callable[[DataFrame], dict] | None = None,
     ) -> dict:
         """Write a stage + seal it.  Returns the manifest.
 
@@ -139,8 +141,11 @@ class StageStore:
         behind an atomic directory swap.  Both branches unseal the stage
         before replacing its data and seal it with the SAME manifest after
         the data commit, so a crash anywhere in between reruns the
-        idempotent stage write."""
+        idempotent stage write.  ``rows`` is observed on the write itself;
+        ``counters(committed data) -> dict`` runs before the seal."""
         t0 = time.time()
+        obs = Observation()
+        df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
         if sort_within:
             df = df.sortWithinPartitions(*sort_within)
         if self.use_iceberg:
@@ -149,35 +154,32 @@ class StageStore:
             # before _seal leaves it vouching for the new data
             if self.is_committed(name):
                 os.remove(self._manifest_path(name))
-            written = self._write_iceberg(df, name, partition_by)
+            self._write_iceberg(df, name, partition_by)
         else:
-            written = self._write_parquet(df, name, partition_by)
-        # lineage counters from the committed bytes, not the plan
-        per_part = (
-            written.groupBy(F.spark_partition_id().alias("pid"))
-            .count()
-            .collect()
-        )
+            self._write_parquet(df, name, partition_by)
         manifest = {
             "stage": name,
             "backend": "iceberg" if self.use_iceberg else "parquet",
             "table": self._identifier(name) if self.use_iceberg else None,
-            "rows": sum(r["count"] for r in per_part),
-            "n_read_partitions": len(per_part),
-            "partition_rows": {str(r["pid"]): r["count"] for r in per_part},
+            "rows": obs.get["rows"],
             "parents": list(parents),
             "config": self.config_fingerprint,
-            "schema": written.schema.simpleString(),
+            "schema": df.schema.json(),
             "written_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-            "write_seconds": round(time.time() - t0, 3),
-            "counters": counters or {},
+            "counters": {},
         }
+        if counters:  # over the committed, not yet sealed data
+            manifest["counters"] = counters(
+                self.spark.read.table(self._identifier(name)) if self.use_iceberg
+                else self.spark.read.schema(df.schema).parquet(self._dir(name) + ".tmp")
+            )
+        manifest["write_seconds"] = round(time.time() - t0, 3)
         self._seal(name, manifest)
         return manifest
 
     def _write_parquet(
         self, df: DataFrame, name: str, partition_by: tuple[str, ...]
-    ) -> DataFrame:
+    ) -> None:
         out = self._dir(name)
         tmp = out + ".tmp"
         if os.path.exists(tmp):
@@ -188,22 +190,19 @@ class StageStore:
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(tmp)
-        return self.spark.read.parquet(tmp)
 
     def _write_iceberg(
         self, df: DataFrame, name: str, partition_by: tuple[str, ...]
-    ) -> DataFrame:
+    ) -> None:
         """DataFrameWriterV2 path: createOrReplace is a single atomic
         Iceberg snapshot commit (the reference's durable-backend contract,
         `lsh-rs/src/table/sqlite.rs:107-356` — transactional replace)."""
-        ident = self._identifier(name)
-        writer = df.writeTo(ident)
+        writer = df.writeTo(self._identifier(name))
         if self.table_format:
             writer = writer.using(self.table_format)
         if partition_by:
             writer = writer.partitionedBy(*[F.col(c) for c in partition_by])
         writer.createOrReplace()
-        return self.spark.read.table(ident)
 
     def _seal(self, name: str, manifest: dict) -> None:
         """Atomically place the _COMMITTED manifest.
@@ -238,7 +237,9 @@ class StageStore:
             raise FileNotFoundError(f"stage {name!r} not committed under {self.root}")
         if self.use_iceberg:
             return self.spark.read.table(self._identifier(name))
-        return self.spark.read.parquet(self._dir(name))
+        # the stored schema: no inference job, and no files read as 0 rows
+        schema = StructType.fromJson(json.loads(self.manifest(name)["schema"]))
+        return self.spark.read.schema(schema).parquet(self._dir(name))
 
     def drop(self, name: str) -> None:
         if self.use_iceberg:

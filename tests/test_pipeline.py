@@ -359,7 +359,10 @@ def test_stage_store_iceberg_seal_ignores_stale_parquet_tmp(spark, tmp_path, mon
     store = StageStore(spark, str(tmp_path / "ice"))
     store._catalog = "ice"
     store.use_iceberg = True
-    monkeypatch.setattr(store, "_write_iceberg", lambda df, name, pb: df)
+    monkeypatch.setattr(
+        store, "_write_iceberg",
+        lambda df, name, pb: df.write.format("noop").mode("overwrite").save(),
+    )
 
     # plant a stale parquet-mode tmp with recognizable junk
     stale = tmp_path / "ice" / "stage9.tmp"
@@ -656,3 +659,153 @@ def test_api_dedup_equals_pipeline_run(spark, tmp_path):
     want = rows(DedupPipeline(spark, CFG, str(tmp_path / "w")).run(docs, resume=False))
     assert rows(MinHashLSH(CFG).dedup(docs)) == want
     assert any(not rep for _, _, rep in want)
+
+
+# -- stage commits: rows observed on the write, schema-pinned reads ---------
+
+#: jobs a StageStore write + read of a one-shuffle aggregate may run: the
+#: shuffle map stage and the write itself, the cost of a plain
+#: ``df.write.parquet`` (a read-back count or schema inference exceeds it)
+STAGE_WRITE_READ_MAX_JOBS = 2
+
+JDBC_IMPL = "org.apache.spark.sql.execution.datasources.v2.jdbc.JDBCTableCatalog"
+
+
+@pytest.fixture(scope="module")
+def stage_store(spark, tmp_path_factory):
+    """``make(backend, root)``: a StageStore on the parquet directory
+    catalog, or on the table branch through Spark's built-in JDBC V2
+    catalog (embedded Derby, which stores no partitioned tables)."""
+    from lsh_rs_spark.sources.storage import StageStore
+
+    d = tmp_path_factory.mktemp("derby_stages")
+    spark.conf.set("spark.sql.catalog.v2stages", JDBC_IMPL)
+    spark.conf.set("spark.sql.catalog.v2stages.url",
+                   f"jdbc:derby:{d}/cat;create=true")
+    spark.conf.set("spark.sql.catalog.v2stages.driver",
+                   "org.apache.derby.jdbc.EmbeddedDriver")
+
+    def make(backend, root):
+        if backend == "parquet":
+            return StageStore(spark, str(root))
+        return StageStore(spark, str(root), use_iceberg=True,
+                          catalog="v2stages", table_format=None)
+    return make
+
+
+@pytest.mark.parametrize("backend", ["parquet", "catalog"])
+def test_stage_write_and_read_run_no_extra_jobs(spark, tmp_path, stage_store, backend):
+    """A commit costs what a plain write costs: the row count comes from
+    the write's own jobs and the read infers no schema."""
+    store = stage_store(backend, tmp_path / "jobs")
+    agg = spark.range(1000).groupBy((F.col("id") % 97).alias("g")).agg(
+        F.count("*").alias("n")
+    )
+    sc = spark.sparkContext
+    group = f"stage-write-read-{backend}"
+    sc.setJobGroup(group, group)
+    try:
+        m = store.write(agg, "agg")
+        back = store.read("agg")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= STAGE_WRITE_READ_MAX_JOBS
+    assert m["rows"] == 97 and back.count() == 97
+
+
+@pytest.mark.parametrize("backend", ["parquet", "catalog"])
+def test_stage_rows_equal_read_back(spark, tmp_path, stage_store, backend):
+    """Observed ``rows`` equals a count of the committed data for an empty
+    frame, an emptied frame and a sorted frame (partitioned on parquet;
+    the JDBC test catalog cannot create partitioned tables)."""
+    store = stage_store(backend, tmp_path / "rows")
+    keyed = spark.range(50).withColumn("k", F.col("id") % 3)
+    part = ("k",) if backend == "parquet" else ()
+    cases = {
+        "empty": (spark.range(0), {}),
+        "filtered_empty": (keyed.where(F.lit(False)), {"partition_by": part}),
+        "sorted": (keyed, {"partition_by": part, "sort_within": ("id",)}),
+    }
+    for name, (df, kw) in cases.items():
+        m = store.write(df, name, **kw)
+        assert store.read(name).count() == m["rows"], name
+    assert store.manifest("sorted")["rows"] == 50
+    assert store.manifest("filtered_empty")["rows"] == 0
+
+
+def test_empty_text_corpus_runs_and_resumes(spark, tmp_path):
+    """A corpus whose texts are all null leaves every stage empty (the
+    partitioned ``buckets`` write commits no file at all): the run returns
+    no rows, and a resumed run reuses every stage."""
+    from lsh_rs_spark.config import PIPELINE_CONFIG
+
+    docs = spark.createDataFrame(
+        [(i, None) for i in range(5)], "doc_id: long, text: string"
+    )
+    wd = str(tmp_path / "run")
+    p1 = DedupPipeline(spark, PIPELINE_CONFIG, wd)
+    assert p1.run(docs, resume=False).count() == 0
+    assert p1.store.manifest("buckets")["rows"] == 0
+    p2 = DedupPipeline(spark, PIPELINE_CONFIG, wd)
+    assert p2.run(docs, resume=True).count() == 0
+    stages = [k for k in p2.metrics if k != "summary"]
+    assert "buckets" in stages and "keep_list" in stages
+    assert all(p2.metrics[s].get("resumed") for s in stages)
+
+
+def test_buckets_counters_match_skew_operators(spark, tmp_path):
+    """The ``buckets`` manifest counters equal the totals of the
+    ``L.bucket_stats`` and ``L.dropped_buckets`` operators over the stored
+    buckets, and the run metrics carry the same values."""
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").limit(200)
+    cfg = DedupConfig(num_perm=16, bands=4, rows_per_band=4,
+                      jaccard_threshold=0.7, max_bucket_size=2)
+    wd = str(tmp_path / "run")
+    pipe = DedupPipeline(spark, cfg, wd)
+    pipe.run(docs, resume=False)
+    counters = pipe.store.manifest("buckets")["counters"]
+    buckets = pipe.store.read("buckets")
+    stats = L.bucket_stats(buckets).agg(
+        F.sum("n_buckets"), F.sum("n_colliding_buckets"), F.max("max_bucket_size")
+    ).first()
+    dropped = L.dropped_buckets(buckets, cfg).agg(
+        F.count(F.lit(1)), F.sum("bucket_size")
+    ).first()
+    assert dropped[0] > 0  # the cap bites on this fixture
+    assert counters == {
+        "n_buckets": stats[0],
+        "n_colliding_buckets": stats[1],
+        "max_bucket_size": stats[2],
+        "dropped_buckets": dropped[0],
+        "dropped_entries": dropped[1],
+    }
+    metrics = json.load(open(f"{wd}/_RUN_METRICS.json"))
+    assert metrics["buckets"]["counters"] == counters
+
+
+def test_manifest_with_unpinned_schema_is_recomputed(spark, tmp_path):
+    """A manifest whose ``schema`` is a ``simpleString`` (as written before
+    schemas were stored as JSON) cannot pin its read: a resumed run
+    recomputes that stage and reaches the cold keep list."""
+    from pyspark.sql.types import StructType
+
+    from lsh_rs_spark.sources.storage import MANIFEST
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").limit(200)
+    wd = str(tmp_path / "run")
+    keep_cold = DedupPipeline(spark, CFG, wd).run(docs, resume=False)
+    keep_cold = keep_cold.orderBy("doc_id").collect()
+
+    path = os.path.join(wd, "edges", MANIFEST)
+    m = json.load(open(path))
+    m["schema"] = StructType.fromJson(json.loads(m["schema"])).simpleString()
+    with open(path, "w") as f:
+        json.dump(m, f)
+
+    p2 = DedupPipeline(spark, CFG, wd)
+    keep = p2.run(docs, resume=True).orderBy("doc_id").collect()
+    assert keep == keep_cold
+    assert "resumed" not in p2.metrics["edges"]
+    assert p2.metrics["signatures"].get("resumed") is True
